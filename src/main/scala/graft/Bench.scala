@@ -136,7 +136,7 @@ object Bench {
       // re-timed inline and still published 5–14× their quiet-run
       // times — four consecutive passes inside the same multi-minute
       // spike agree with each other, so inline re-timing cannot reject
-      // it). A query whose min is STILL >3× its committed prior gets
+      // it). A query whose min is STILL >2× its committed prior gets
       // one more pass at the END of the sweep, minutes later, when the
       // spike has either passed (the pass supersedes the spiked min) or
       // persists (the number stands — a real regression survives). All

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Evidence tool (Bench/IvmTiming's sibling): candidate-pair counts
   * for the prefix-filter dedup ladder, per fixture — the number that
   * separates "candidate generation dominates" from "verification

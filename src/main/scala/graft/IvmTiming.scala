@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit, pmod}
 
 /** Evidence tool (Bench's sibling): the incremental-vs-oneshot timing

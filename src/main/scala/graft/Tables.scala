@@ -26,34 +26,51 @@ object Tables {
     * file count alone reaches `atLeast` no footer is opened, so at
     * real scale (thousands of files) this is a directory listing,
     * not a metadata sweep. Cached per path — layout is immutable for
-    * a fixture's lifetime.
+    * a fixture's lifetime — but only when the count succeeds: a failed
+    * listing or footer read is logged at WARN and answers `atLeast`
+    * ("assume parallel enough", so no fan-out) for this call alone,
+    * and the next call retries.
     */
   private val scanUnitCache =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
-  private def scanUnits(s: SparkSession, path: String, atLeast: Int): Int =
-    scanUnitCache.computeIfAbsent(path + "#" + atLeast, { _ =>
-      try {
-        val conf = s.sessionState.newHadoopConf()
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(conf)
-        val files = {
-          val st = fs.getFileStatus(p)
-          if (st.isDirectory)
-            fs.listStatus(p).toSeq.filter(f => f.isFile &&
-              !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith("."))
-          else Seq(st)
-        }
-        if (files.size >= atLeast) Integer.valueOf(files.size)
-        else Integer.valueOf(files.map { f =>
-          val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(f, conf))
-          try in.getRowGroups.size finally in.close()
-        }.sum)
-      } catch { case _: Throwable => Integer.valueOf(atLeast) } // unknown: assume parallel enough
-    }).intValue()
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  private[graft] def scanUnits(s: SparkSession, path: String, atLeast: Int): Int = {
+    val key = path + "#" + atLeast
+    val cached = scanUnitCache.get(key)
+    if (cached != null) cached.intValue()
+    else try {
+      val n = countScanUnits(s, path, atLeast)
+      scanUnitCache.putIfAbsent(key, Integer.valueOf(n))
+      n
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        log.warn(s"scan-unit count failed for $path; assuming $atLeast " +
+          s"(no map-side fan-out) for this scan: $e")
+        atLeast
+    }
+  }
+
+  private def countScanUnits(s: SparkSession, path: String, atLeast: Int): Int = {
+    val conf = s.sessionState.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    val files = {
+      val st = fs.getFileStatus(p)
+      if (st.isDirectory)
+        fs.listStatus(p).toSeq.filter(f => f.isFile &&
+          !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith("."))
+      else Seq(st)
+    }
+    if (files.size >= atLeast) files.size
+    else files.map { f =>
+      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+      try in.getRowGroups.size finally in.close()
+    }.sum
+  }
 
   /** Scale-adaptive map-side fan-out (optimization guide §2: make
     * partitioning scale-adaptive, never a constant tuned for one

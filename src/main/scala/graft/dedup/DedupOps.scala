@@ -92,7 +92,7 @@ object DedupOps {
   /** One row per (document, distinct shingle) with the doc's shingle
     * count — a typed flatMap: a single JVM pass per document, emitted
     * once, memoized per (session, dataset), and reused by the exact
-    * joins, the MinHash signature aggregation, and the histogram.
+    * joins and the prefix family's rarity ranking.
     */
   private def shingleRows(s: SparkSession, dir: String): DataFrame =
     substrate("shingles", s, dir) {
@@ -158,13 +158,40 @@ object DedupOps {
       MaxShingleDf)
     val a = sh.select(col("doc_id").as("doc_a"), col("n_sh").as("na"), col("sh_h"))
     val b = sh.select(col("doc_id").as("doc_b"), col("n_sh").as("nb"), col("sh_h"))
-    a.join(b, Seq("sh_h"))
+    jaccardAtLeast(a.join(b, Seq("sh_h"))
       .filter(col("doc_a") < col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("j", col("inter") / (col("na") + col("nb") - col("inter")))
-      .filter(col("j") >= 0.8)
-      .select(col("doc_a"), col("doc_b"), round(col("j"), 6).as("jaccard"))
+      .agg(count(lit(1)).as("inter")), 0.8)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+  }
+
+  /** Keeps the rows whose Jaccard J = inter / (na + nb − inter) ≥ t,
+    * from the intersection size `inter` and the two set sizes. Adds
+    * the unrounded J as `j` (the histogram buckets it raw) and J
+    * rounded to the oracles' 6 places as `jaccard`. The exact shingle
+    * join counts `inter`; every set-based path takes it from
+    * [[verifyJaccard]].
+    */
+  private def jaccardAtLeast(rows: DataFrame, t: Double): DataFrame =
+    rows.withColumn("j", col("inter") / (col("na") + col("nb") - col("inter")))
+      .filter(col("j") >= t)
+      .withColumn("jaccard", round(col("j"), 6))
+
+  /** The one exact-Jaccard verifier of candidate pairs. Each side's
+    * hashed shingle set is looked up in its OWN source — doc_a in
+    * `setsA`, doc_b in `setsB`, both (doc_id, hs, n_sh) — so a caller
+    * whose two sides live in differently partitioned frames never has
+    * to union them. Returns the joined rows that pass, with `j` and
+    * `jaccard` added (see [[jaccardAtLeast]]); callers project.
+    */
+  private[dedup] def verifyJaccard(cand: DataFrame, setsA: DataFrame,
+      setsB: DataFrame, t: Double): DataFrame = {
+    val a = setsA.select(col("doc_id").as("doc_a"), col("hs").as("ha"),
+      col("n_sh").as("na"))
+    val b = setsB.select(col("doc_id").as("doc_b"), col("hs").as("hb"),
+      col("n_sh").as("nb"))
+    jaccardAtLeast(cand.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
+      .withColumn("inter", size(array_intersect(col("ha"), col("hb")))), t)
   }
 
   /** Exact Jaccard ≥ 0.8 via PREFIX FILTERING (the AllPairs/PPJoin
@@ -181,8 +208,8 @@ object DedupOps {
     * rare keys by construction — candidate fan-out per key is small
     * without dropping anything, where the df-capped baseline must
     * discard hot keys to stay bounded. Candidates are then verified
-    * exactly against the full hashed shingle sets (array_intersect,
-    * as [[minhashNeardup]]'s verification). Same output contract and
+    * exactly against the full hashed shingle sets ([[verifyJaccard]],
+    * as in [[minhashNeardup]]). Same output contract and
     * the SAME oracle as [[ngramJaccard]] — the differential gate
     * checks the completeness theorem itself. The result sets are
     * identical at fixture scale, where no shared shingle exceeds
@@ -193,7 +220,7 @@ object DedupOps {
     * boundary cases.
     */
   def prefixFilterJaccard(s: SparkSession, dir: String): DataFrame =
-    verifyJaccardPairs(s, dir, prefixFilterCandidates(s, dir))
+    prefixFilterJaccardAt(s, dir, 4, 5)
 
   /** Per-doc shingles ranked by the corpus-wide rarity order (df ASC,
     * hash ASC) — the shared substrate of the prefix-filter family
@@ -252,17 +279,12 @@ object DedupOps {
       .select(col("doc_a"), col("doc_b")).distinct()
   }
 
-  /** Exact verification of candidate pairs against the full hashed
-    * shingle sets — shared by every symmetric prefix-family variant;
-    * same output contract and rounding as [[ngramJaccard]].
-    */
-  /** Per-doc full hashed shingle sets for exact verification — built
-    * from the memoized [[rarityRanked]] frame (8-byte hashes, no
-    * shingle strings), so the expensive bag scan + xxhash re-eval
-    * never repeats per verify call. r12: memoized under the substrate
-    * discipline — five registry queries (prefix, ppjoin, both
-    * containment rungs, the histogram) each re-ran the collect_set
-    * aggregation over the ranked frame per verify call — but with
+  /** Per-doc full hashed shingle sets (doc_id, hs, n_sh) for exact
+    * verification: the corpus's [[minhashSketch]], so the sets come
+    * from one document-local typed pass with no shuffle. Memoized
+    * under the substrate discipline — five registry queries (prefix,
+    * ppjoin, both containment rungs, the histogram) and
+    * [[minhashNeardup]] verify against the same sets — but with
     * SIZE-AWARE ADMISSION: pinning is only free while the frame is
     * small next to the heap. Measured at the 100×-docs decade in the
     * 8 GiB local JVM, the extra ~350 MB pin squeezed execution memory
@@ -270,53 +292,36 @@ object DedupOps {
     * (dedup_prefix_filter 21.2→37.2 s) while every smaller decade won
     * (sf0.1 −0.2 s × 5 queries; 10×-docs prefix 3.64→2.76 s). The
     * admission bound — estimated cells × 8 B ≤ 2% of max heap — keeps
-    * the memo at the decades where it pays and recomputes per call
-    * past them, exactly how a cache admission policy should degrade.
+    * the memo at the decades where it pays; past them every call
+    * reads the same stateless sketch, whose re-runs cost one pass over
+    * the documents each.
     */
   private val setsAdmission =
     scala.collection.mutable.Map[(SparkSession, String), Boolean]()
 
-  private def hashedSets(s: SparkSession, dir: String): DataFrame = {
-    def build = rarityRanked(s, dir)
-      .select(col("doc_id"), col("n_sh"), col("sh_h"))
-      .groupBy(col("doc_id"))
-      .agg(collect_set(col("sh_h")).as("hs"), first(col("n_sh")).as("n_sh"))
+  private[dedup] def hashedSets(s: SparkSession, dir: String): DataFrame = {
     val key = (s, dir)
     val known = setsAdmission.synchronized {
       setsAdmission.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
       setsAdmission.get(key)
     }
     val admit = known.getOrElse {
-      // one count over the persisted parent (fast) — outside the lock,
-      // per the KeyedMemo rule: never run Spark jobs under a memo lock
-      val cells = rarityRanked(s, dir).count()
+      // cells = Σ n_sh, one (doc, shingle) per cell; one job, outside
+      // the lock, per the KeyedMemo rule: never run Spark jobs under a
+      // memo lock
+      val cells = corpusSketch(s, dir)
+        .agg(coalesce(sum(col("n_sh")), lit(0L))).head().getLong(0)
       val a = cells * 8L * 50 <= Runtime.getRuntime.maxMemory
       setsAdmission.synchronized { setsAdmission.update(key, a) }
       a
     }
-    if (!admit) build
+    if (!admit) corpusSketch(s, dir)
     else substrate("hashed_sets", s, dir) {
-      val sets = build
+      val sets = corpusSketch(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       sets.count() // materialize once (cold-race discipline of the family)
       sets
     }
-  }
-
-  private def verifyJaccardPairs(
-      s: SparkSession, dir: String, cand: DataFrame,
-      t: Double = 0.8): DataFrame = {
-    val sets = hashedSets(s, dir)
-    val a = sets.select(col("doc_id").as("doc_a"), col("hs").as("ha"),
-      col("n_sh").as("na"))
-    val b = sets.select(col("doc_id").as("doc_b"), col("hs").as("hb"),
-      col("n_sh").as("nb"))
-    cand.select(col("doc_a"), col("doc_b"))
-      .join(a, Seq("doc_a")).join(b, Seq("doc_b"))
-      .withColumn("inter", size(array_intersect(col("ha"), col("hb"))))
-      .withColumn("j", col("inter") / (col("na") + col("nb") - col("inter")))
-      .filter(col("j") >= t)
-      .select(col("doc_a"), col("doc_b"), round(col("j"), 6).as("jaccard"))
   }
 
   /** Fuzz-sweep entry points: the full filter-then-verify pipelines at
@@ -330,14 +335,18 @@ object DedupOps {
     * more than double epsilon.)
     */
   private[graft] def prefixFilterJaccardAt(
-      s: SparkSession, dir: String, p: Int, q: Int): DataFrame =
-    verifyJaccardPairs(s, dir, prefixFilterCandidatesAt(s, dir, p, q),
-      p.toDouble / q)
+      s: SparkSession, dir: String, p: Int, q: Int): DataFrame = {
+    val sets = hashedSets(s, dir)
+    verifyJaccard(prefixFilterCandidatesAt(s, dir, p, q), sets, sets,
+      p.toDouble / q).select(col("doc_a"), col("doc_b"), col("jaccard"))
+  }
 
   private[graft] def ppjoinJaccardAt(
-      s: SparkSession, dir: String, p: Int, q: Int): DataFrame =
-    verifyJaccardPairs(s, dir, ppjoinCandidatesAt(s, dir, p, q),
-      p.toDouble / q)
+      s: SparkSession, dir: String, p: Int, q: Int): DataFrame = {
+    val sets = hashedSets(s, dir)
+    verifyJaccard(ppjoinCandidatesAt(s, dir, p, q), sets, sets,
+      p.toDouble / q).select(col("doc_a"), col("doc_b"), col("jaccard"))
+  }
 
   /** [[prefixFilterJaccard]] plus PPJoin's LENGTH and POSITIONAL
     * filters (Xiao et al., WWW'08) — the next rung on the AllPairs
@@ -371,7 +380,7 @@ object DedupOps {
     * filter's (the economy that justifies the rung).
     */
   def ppjoinJaccard(s: SparkSession, dir: String): DataFrame =
-    verifyJaccardPairs(s, dir, ppjoinCandidates(s, dir))
+    ppjoinJaccardAt(s, dir, 4, 5)
 
   private[graft] def ppjoinCandidates(
       s: SparkSession, dir: String): DataFrame =
@@ -701,8 +710,8 @@ object DedupOps {
 
   /** JVM twin of the band key: SQL `xxhash64(m0, m1, ..)` seed-chains
     * the arguments (each value hashed with the running hash as seed,
-    * starting from 42) — replicated here so JVM-computed keys land in
-    * the same buckets as [[minhashBuckets]]'s.
+    * starting from 42) — replicated here so the typed path's keys equal
+    * `xxhash64` over each band's slice of [[minhashSignature]].
     */
   private[dedup] def bandKey(sig: Array[Long], band: Int,
       rows: Int = RowsPerBand): Long = {
@@ -716,6 +725,78 @@ object DedupOps {
     h
   }
 
+  /** Row kernel, text side: a document's distinct word-3-gram
+    * shingles ([[shingleStrings]]), each hashed as SQL `xxhash64`
+    * would ([[hashShingle]]). Empty below 3 tokens.
+    */
+  private[dedup] def hashedShingleSet(text: String): Array[Long] =
+    shingleStrings(text).map(hashShingle).toArray
+
+  /** Row kernel, set side: the band keys of a hashed shingle set under
+    * a `bands`-way split of the [[NumHashes]]-long signature — 31-bit
+    * residues, [[signatureOf]], then [[bandKey]] per band. Every
+    * MinHash consumer reaches its band keys through here; DedupSpec
+    * pins the result against the SQL forms bit-for-bit.
+    */
+  private[dedup] def bandKeys(hs: Array[Long], bands: Int): Array[Long] = {
+    val sig = signatureOf(hs.map(v => ((v % P) + P) % P))
+    Array.tabulate(bands)(b => bandKey(sig, b, NumHashes / bands))
+  }
+
+  /** The one MinHash sketch: per document of `docs` (doc_id, text) its
+    * hashed shingle set `hs` and set size `n_sh`, in one typed,
+    * document-local pass — no shuffle. A document with no shingles
+    * emits nothing. The verification sets ([[hashedSets]]), the band
+    * rows ([[bandRows]]), the settled index and the arriving batch of
+    * the incremental paths are all projections of this frame.
+    */
+  private[dedup] def minhashSketch(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .flatMap { case (id, text) =>
+        val hs = hashedShingleSet(text)
+        if (hs.isEmpty) None else Some((id, hs, hs.length))
+      }
+      .toDF("doc_id", "hs", "n_sh")
+  }
+
+  /** [[minhashSketch]] of the whole corpus — [[hashedSets]]' source,
+    * and its frame as-is when admission refuses the memo.
+    */
+  private[dedup] def corpusSketch(s: SparkSession, dir: String): DataFrame =
+    minhashSketch(Tables.documents(s, dir))
+
+  /** The incremental split of the corpus: the arriving batch (doc_id
+    * mod 10 == [[IncBatchMod]], as every `*_incr` row) or the settled
+    * rest.
+    */
+  private def incSlice(s: SparkSession, dir: String, batch: Boolean): DataFrame = {
+    val inBatch = pmod(col("doc_id"), lit(10)) === IncBatchMod
+    Tables.documents(s, dir).filter(if (batch) inBatch else !inBatch)
+  }
+
+  /** Banded LSH index rows (doc_id, band, bkey) of a sketch frame: the
+    * set-side kernel per document, `bands` rows each, no shuffle.
+    */
+  private def bandRows(sketch: DataFrame, bands: Int): DataFrame = {
+    import sketch.sparkSession.implicits._
+    sketch.select(col("doc_id"), col("hs")).as[(Long, Array[Long])]
+      .flatMap { case (id, hs) =>
+        bandKeys(hs, bands).iterator.zipWithIndex.map { case (k, b) => (id, b, k) }
+      }
+      .toDF("doc_id", "band", "bkey")
+  }
+
+  /** Candidate pairs (doc_a < doc_b) of band rows: the bucket
+    * equi-join on (band, bkey), one row per pair however many bands
+    * it collides in.
+    */
+  private def bandCandidates(buckets: DataFrame): DataFrame =
+    buckets.toDF("doc_a", "band", "bkey")
+      .join(buckets.toDF("doc_b", "band", "bkey"), Seq("band", "bkey"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select(col("doc_a"), col("doc_b")).distinct()
+
   /** Banded LSH candidate pairs at an ARBITRARY band split of the
     * [[NumHashes]]-long signature (bands must divide it) — the
     * fuzz-sweep form of [[minhashNeardup]]'s candidate stage.
@@ -728,165 +809,37 @@ object DedupOps {
   private[graft] def minhashBandedCandidatesAt(
       s: SparkSession, dir: String, bands: Int): DataFrame = {
     require(NumHashes % bands == 0, s"bands=$bands must divide $NumHashes")
-    import s.implicits._
-    val rows = NumHashes / bands
-    val buckets = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val x64 = shingleStrings(text).map(hashShingle).toArray
-        if (x64.isEmpty) Nil
-        else {
-          val sig = signatureOf(x64.map(v => ((v % P) + P) % P))
-          (0 until bands).map(b => (id, b, bandKey(sig, b, rows)))
-        }
-      }
-      .toDF("doc_id", "band", "bkey")
-    buckets.toDF("doc_a", "band", "bkey")
-      .join(buckets.toDF("doc_b", "band", "bkey"), Seq("band", "bkey"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    bandCandidates(bandRows(corpusSketch(s, dir), bands))
   }
 
   /** Banded-LSH candidate pairs verified by exact Jaccard ≥ 0.8 —
     * same output contract (and oracle) as [[ngramJaccard]], but the
     * join is on band buckets: shuffle cost O(docs × bands), never
-    * all-pairs. This is the dedup plan that survives 100 TB.
+    * all-pairs.
     *
-    * Signatures are computed by exploding shingles and taking
-    * [[NumHashes]] `min` aggregates — a single partial-aggregated
-    * hash agg over simple codegen'd arithmetic. (The array-expression
-    * form in [[minhashSignature]] builds a NumHashes-branch
-    * expression tree that overflows whole-stage codegen; kept for
-    * per-row use in specs.)
-    */
-  def minhashNeardup(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // r12: both the signatures and the verification sets derive from
-    // the memoized [[hashedSets]] substrate instead of two fresh
-    // tokenize+shingle+hash passes over the corpus per call —
-    // [[hashShingle]] IS SQL xxhash64 (seed 42, the parity DedupSpec
-    // pins), so the hash sets are the same values. The doc_id
-    // repartition spreads the 96-permutation signature fold across
-    // cores (the cached frame may sit in one coalesced partition);
-    // hash-keyed, so deterministic, and the per-permutation min is
-    // order-free, so array order differences are invisible.
-    val sets = hashedSets(s, dir)
-      .select(col("doc_id"), col("hs").as("shset"), col("n_sh"))
-    val buckets = sets
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), col("shset")).as[(Long, Seq[Long])]
-      .flatMap { case (id, hs) =>
-        val sig = signatureOf(hs.iterator.map(v => ((v % P) + P) % P).toArray)
-        (0 until Bands).map(b => (id, b, bandKey(sig, b)))
-      }
-      .toDF("doc_id", "band", "bkey")
-    val cand = buckets.toDF("doc_a", "band", "bkey")
-      .join(buckets.toDF("doc_b", "band", "bkey"), Seq("band", "bkey"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct() // a pair may collide in many bands
-    verifyJaccard(cand, sets, sets)
-  }
-
-  /** Shingle rows with the two hash forms the MinHash path needs —
-    * x64: 64-bit identity for exact set verification (collision-free
-    * in practice); x: its 31-bit residue feeding the permutations.
-    */
-  private def hashedShingles(s: SparkSession, dir: String): DataFrame =
-    shingleRows(s, dir)
-      .withColumn("x64", xxhash64(col("shingle")))
-      .withColumn("x", pmod(col("x64"), lit(P)))
-
-  /** Per-doc (band, bucket-key) rows — the banded LSH index build:
-    * one partial-aggregated hash agg for the [[NumHashes]] minima,
-    * then a [[Bands]]-way explode. (The array-expression form in
+    * Band keys come from the set-side kernel ([[bandRows]]) over the
+    * [[hashedSets]] memo, which also serves the verification and the
+    * prefix family, so the corpus is shingled once for all of them.
+    * (The array-expression form in
     * [[minhashSignature]] builds a NumHashes-branch expression tree
-    * that overflows whole-stage codegen; kept for per-row spec use.)
+    * that overflows whole-stage codegen; it is kept as the per-row
+    * reference the kernel is checked against.)
     */
-  private def minhashBuckets(sh: DataFrame): DataFrame = {
-    val minCols = (0 until NumHashes).map(i =>
-      min(pmod(lit(hashA(i)) * col("x") + lit(hashB(i)), lit(P))).as(s"m$i"))
-    val sigs = sh.groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*)
-    val bandKeys = (0 until Bands).map { bnd =>
-      val slice = (0 until RowsPerBand).map(r => col(s"m${bnd * RowsPerBand + r}"))
-      struct(lit(bnd).as("band"), xxhash64(slice: _*).as("bkey"))
-    }
-    sigs
-      .select(col("doc_id"), explode(array(bandKeys: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-  }
+  def minhashNeardup(s: SparkSession, dir: String): DataFrame =
+    minhashPairs(hashedSets(s, dir))
 
-  /** Typed twin of [[minhashBuckets]]∘[[hashedShingles]]: signatures
-    * and band keys computed per document in ONE stateless JVM pass —
-    * zero shuffle (the agg form shuffles the whole shingle bag through
-    * a 96-column hash agg whose serialized stage sits just above the
-    * 1 MiB task-binary WARN threshold). Bit-for-bit the SQL keys
-    * ([[hashShingle]]/[[signatureOf]]/[[bandKey]] — the parity
-    * [[neardupIngest]]'s stream-static join already depends on and
-    * DedupSpec pins), and a doc with no shingles emits nothing, same
-    * as the agg form where the doc simply has no shingle rows.
+  /** [[minhashNeardup]] over a given verification-set frame
+    * (doc_id, hs, n_sh). The doc_id repartition spreads the
+    * 96-permutation signature fold across cores (a cached or scanned
+    * frame may sit in one partition); it is hash-keyed, so
+    * deterministic, and the per-permutation min is order-free.
     */
-  private def minhashBucketsTyped(
-      s: SparkSession, dir: String, batchOnly: Option[Boolean]): DataFrame = {
-    import s.implicits._
-    val docs = batchOnly match {
-      case Some(inBatch) => Tables.documents(s, dir).filter(
-        if (inBatch) pmod(col("doc_id"), lit(10)) === IncBatchMod
-        else pmod(col("doc_id"), lit(10)) =!= IncBatchMod)
-      case None => Tables.documents(s, dir)
-    }
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val x64 = shingleStrings(text).map(hashShingle).toArray
-        if (x64.isEmpty) Nil
-        else {
-          val sig = signatureOf(x64.map(v => ((v % P) + P) % P))
-          (0 until Bands).map(b => (id, b, bandKey(sig, b)))
-        }
-      }
-      .toDF("doc_id", "band", "bkey")
-  }
-
-  /** Typed twin of [[shingleSets]]∘[[hashedShingles]]: the per-doc
-    * hashed verification set is document-local, so it never needed the
-    * collect_set shuffle. Same rows (array order differs; every
-    * consumer is array_intersect/size — set semantics).
-    */
-  private def shingleSetsTyped(
-      s: SparkSession, dir: String, batchOnly: Option[Boolean]): DataFrame = {
-    import s.implicits._
-    val docs = batchOnly match {
-      case Some(inBatch) => Tables.documents(s, dir).filter(
-        if (inBatch) pmod(col("doc_id"), lit(10)) === IncBatchMod
-        else pmod(col("doc_id"), lit(10)) =!= IncBatchMod)
-      case None => Tables.documents(s, dir)
-    }
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val x64 = shingleStrings(text).map(hashShingle).toArray
-        if (x64.isEmpty) Nil else Seq((id, x64, x64.length))
-      }
-      .toDF("doc_id", "shset", "n_sh")
-  }
-
-  /** Per-doc hashed shingle set + size, for exact verification (the
-    * same keys the exact ngramJaccard joins on), gathered once.
-    */
-  private def shingleSets(sh: DataFrame): DataFrame =
-    sh.groupBy(col("doc_id"))
-      .agg(collect_set(col("x64")).as("shset"), first(col("n_sh")).as("n_sh"))
-
-  /** Exact Jaccard ≥ 0.8 verification of a (doc_a, doc_b) candidate
-    * frame against per-side shingle-set frames.
-    */
-  private def verifyJaccard(cand: DataFrame, setsA: DataFrame,
-      setsB: DataFrame): DataFrame = {
-    val a = setsA.select(col("doc_id").as("doc_a"), col("shset").as("sha"), col("n_sh").as("na"))
-    val b = setsB.select(col("doc_id").as("doc_b"), col("shset").as("shb"), col("n_sh").as("nb"))
-    cand.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("j", col("inter") / (col("na") + col("nb") - col("inter")))
-      .filter(col("j") >= 0.8)
-      .select(col("doc_a"), col("doc_b"), round(col("j"), 6).as("jaccard"))
+  private[dedup] def minhashPairs(sets: DataFrame): DataFrame = {
+    val buckets = bandRows(
+      sets.repartition(sets.sparkSession.sparkContext.defaultParallelism, col("doc_id")),
+      Bands)
+    verifyJaccard(bandCandidates(buckets), sets, sets, 0.8)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
   /** Incremental MinHash maintenance — the banded-LSH ingest path,
@@ -894,43 +847,47 @@ object DedupOps {
     * [[dedupClustersIncremental]]; IVF: SimOps.cosineTopkIvfIncremental):
     * the settled corpus's band buckets and verification sets are
     * memoized state (built once per (session, dataset), the 100 TB
-    * analog of a persisted LSH index), and an arriving batch (doc_id
-    * mod 10 == [[IncBatchMod]], as every `*_incr` row) pays only its
-    * own signatures plus a bucket equi-join against the settled
-    * index — O(batch·bands) new work, the corpus is never
-    * re-signatured. Output is the verified cross-boundary pairs in
-    * canonical doc_a < doc_b order; the oracle is the EXACT Jaccard
-    * join filtered to the batch/base boundary (banded recall ≈ 1 at
-    * J ≥ 0.8, same contract as `dedup_minhash`), so the gate checks
-    * the maintenance identity itself. DedupSpec additionally pins
-    * ≡ the full recompute's cross-boundary slice.
+    * analog of a persisted LSH index), and an arriving batch
+    * ([[incSlice]]) pays only its own sketch plus a bucket equi-join
+    * against the settled index — O(batch·bands) new work, the corpus
+    * is never re-signatured. Output is the verified cross-boundary
+    * pairs in canonical doc_a < doc_b order; the oracle is the EXACT
+    * Jaccard join filtered to the batch/base boundary (banded recall
+    * ≈ 1 at J ≥ 0.8, same contract as `dedup_minhash`), so the gate
+    * checks the maintenance identity itself. DedupSpec additionally
+    * pins ≡ the full recompute's cross-boundary slice.
     */
   def dedupMinhashIncremental(s: SparkSession, dir: String): DataFrame = {
     val (settledBuckets, settledSets) = settledMinhashIndex(s, dir)
-    val cand = minhashBucketsTyped(s, dir, Some(true)).toDF("doc_n", "band", "bkey")
+    val batch = minhashSketch(incSlice(s, dir, batch = true))
+    val cand = bandRows(batch, Bands).toDF("doc_n", "band", "bkey")
       .join(settledBuckets.toDF("doc_p", "band", "bkey"), Seq("band", "bkey"))
       .select(col("doc_n"), col("doc_p")).distinct()
       .select(least(col("doc_n"), col("doc_p")).as("doc_a"),
         greatest(col("doc_n"), col("doc_p")).as("doc_b"))
-    val allSets = shingleSetsTyped(s, dir, Some(true)).union(settledSets)
-    verifyJaccard(cand, allSets, allSets)
+    val allSets = batch.union(settledSets)
+    verifyJaccard(cand, allSets, allSets, 0.8)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
   /** The settled corpus's banded index as (band buckets, verification
     * sets), memoized per (session, dataset) — "yesterday's index",
     * shared by [[dedupMinhashIncremental]] and the streaming ingest
-    * twin [[neardupIngest]]. Both frames are cached+materialized at
-    * build so every later read is index-lookup-shaped.
+    * twin [[neardupIngest]]. The sets are the settled slice's
+    * [[minhashSketch]] and the buckets are derived from those cached
+    * sets, so the corpus is read and shingled once. Both frames are
+    * cached+materialized at build so every later read is
+    * index-lookup-shaped.
     */
   private[graft] def settledMinhashIndex(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val buckets = pairMemo("settled_minhash_buckets", s, dir) {
-      val f = minhashBucketsTyped(s, dir, Some(false)).cache()
+    val sets = pairMemo("settled_minhash_sets", s, dir) {
+      val f = minhashSketch(incSlice(s, dir, batch = false)).cache()
       f.count() // materialize: the settled index is READ thereafter
       f
     }
-    val sets = pairMemo("settled_minhash_sets", s, dir) {
-      val f = shingleSetsTyped(s, dir, Some(false)).cache()
+    val buckets = pairMemo("settled_minhash_buckets", s, dir) {
+      val f = bandRows(sets, Bands).cache()
       f.count()
       f
     }
@@ -953,16 +910,18 @@ object DedupOps {
     * destabilized to 0.8×–1.9×, cache-state-dependent). A long-lived
     * corpus keeps its index on disk:
     *
-    *  - band buckets (doc_id, band, bkey), bucketed+sorted by bkey —
-    *    the probe join's key, so each ingest's candidate join reads
-    *    the settled side with NO exchange and NO sort (broadcast of
-    *    the batch keys or a zero-exchange merge, whichever AQE
+    *  - verification sets (doc_id, hs, n_sh), bucketed by doc_id —
+    *    the candidate pairs' set-lookup side. Written first, from the
+    *    settled slice's [[minhashSketch]].
+    *  - band buckets (doc_id, band, bkey), derived from the sets
+    *    table (so the corpus is shingled once), bucketed+sorted by
+    *    bkey — the probe join's key, so each ingest's candidate join
+    *    reads the settled side with NO exchange and NO sort (broadcast
+    *    of the batch keys or a zero-exchange merge, whichever AQE
     *    picks): a streaming columnar scan of three long columns,
     *    whose cost is disk-bandwidth-linear in settled state with a
     *    constant ~100× below re-signaturing the corpus, and — the
     *    point — INDEPENDENT of what happens to be cache-resident.
-    *  - verification sets (doc_id, shset, n_sh), bucketed by doc_id —
-    *    the candidate pairs' set-lookup side.
     *
     * Written once per (JVM, fixture dir) through the session catalog
     * (the [[graft.sources.Bucketed]] discipline — bucket metadata
@@ -979,21 +938,21 @@ object DedupOps {
     val key = graft.Tables.dirKey(dir)
     val bucketsName = s"graft_ivm_mh_buckets_$key"
     val setsName = s"graft_ivm_mh_sets_$key"
-    if (!s.catalog.tableExists(bucketsName)) {
-      minhashBucketsTyped(s, dir, Some(false))
-        .write.mode("overwrite")
-        .bucketBy(IvmBuckets, "bkey").sortBy("bkey")
-        .option("path",
-          s"${sys.props("java.io.tmpdir")}/graft-src/ivm/$bucketsName")
-        .saveAsTable(bucketsName)
-    }
     if (!s.catalog.tableExists(setsName)) {
-      shingleSetsTyped(s, dir, Some(false))
+      minhashSketch(incSlice(s, dir, batch = false))
         .write.mode("overwrite")
         .bucketBy(IvmBuckets, "doc_id").sortBy("doc_id")
         .option("path",
           s"${sys.props("java.io.tmpdir")}/graft-src/ivm/$setsName")
         .saveAsTable(setsName)
+    }
+    if (!s.catalog.tableExists(bucketsName)) {
+      bandRows(s.table(setsName), Bands)
+        .write.mode("overwrite")
+        .bucketBy(IvmBuckets, "bkey").sortBy("bkey")
+        .option("path",
+          s"${sys.props("java.io.tmpdir")}/graft-src/ivm/$bucketsName")
+        .saveAsTable(bucketsName)
     }
     (s.table(bucketsName), s.table(setsName))
   }
@@ -1014,33 +973,27 @@ object DedupOps {
     * is exactly the table's bucket+sort column, which keeps the
     * settled side exchange-free AND sort-free under the merge join.
     *
-    * Verification joins each candidate side against its OWN source —
-    * doc_n against the batch's typed sets, doc_p against the sets
-    * TABLE (bucketed on doc_id, so the corpus side again moves no
-    * data) — never a batch∪settled union, which would destroy the
-    * table's partitioning and reshuffle the corpus-sized array
-    * column per ingest (measured: the union form spilled ~30 GB of
-    * transient shuffle per run at the 1000×-docs fixture).
+    * Verification looks each candidate side up in its OWN source —
+    * the batch doc (doc_a here) in the batch's sketch, the settled
+    * doc (doc_b) in the sets TABLE (bucketed on doc_id, so the corpus
+    * side again moves no data) — never a batch∪settled union, which
+    * would destroy the table's partitioning and reshuffle the
+    * corpus-sized array column per ingest (measured: the union form
+    * spilled ~30 GB of transient shuffle per run at the 1000×-docs
+    * fixture).
     */
   def dedupMinhashIncrementalDurable(s: SparkSession, dir: String): DataFrame = {
     val (settledBuckets, settledSets) = settledMinhashTables(s, dir)
-    val cand = minhashBucketsTyped(s, dir, Some(true))
-      .select(col("doc_id").as("doc_n"), col("bkey"))
-      .join(settledBuckets.select(col("doc_id").as("doc_p"), col("bkey")),
+    val batch = minhashSketch(incSlice(s, dir, batch = true))
+    val cand = bandRows(batch, Bands)
+      .select(col("doc_id").as("doc_a"), col("bkey"))
+      .join(settledBuckets.select(col("doc_id").as("doc_b"), col("bkey")),
         Seq("bkey"))
-      .select(col("doc_n"), col("doc_p")).distinct()
-    val batchSets = shingleSetsTyped(s, dir, Some(true))
-      .select(col("doc_id").as("doc_n"), col("shset").as("shn"),
-        col("n_sh").as("nn"))
-    val setsP = settledSets.select(col("doc_id").as("doc_p"),
-      col("shset").as("shp"), col("n_sh").as("np"))
-    cand.join(batchSets, Seq("doc_n")).join(setsP, Seq("doc_p"))
-      .withColumn("inter", size(array_intersect(col("shn"), col("shp"))))
-      .withColumn("j", col("inter") / (col("nn") + col("np") - col("inter")))
-      .filter(col("j") >= 0.8)
-      .select(least(col("doc_n"), col("doc_p")).as("doc_a"),
-        greatest(col("doc_n"), col("doc_p")).as("doc_b"),
-        round(col("j"), 6).as("jaccard"))
+      .select(col("doc_a"), col("doc_b")).distinct()
+    verifyJaccard(cand, batch, settledSets, 0.8)
+      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"),
+        col("jaccard"))
   }
 
   /** The settled component structure ([[settledStars]]) as a DURABLE
@@ -1085,32 +1038,30 @@ object DedupOps {
         .toDF("doc_id", "canonical")
     }
 
-  /** Streaming ingest-time near-dup flagging — [[dedupMinhashIncremental]]
-    * re-expressed so the arriving documents can be a STREAM: each
-    * document's shingles, signature, band keys and hashed
-    * verification set are computed in ONE stateless typed pass on the
-    * executor ([[hashShingle]]/[[signatureOf]]/[[bandKey]] — JVM
-    * twins of the SQL expressions, bit-for-bit), so the stream side
-    * needs no aggregation at all; candidates come from a
-    * stream-static equi-join against the memoized settled band
-    * buckets, verification from a second stream-static join against
-    * the settled shingle sets, and the only streaming state is the
-    * pair dedup (a pair can match in several bands) — the event-time
-    * watermark (set here, after the flatMap: a typed map re-creates
-    * attributes, which strips upstream event-time metadata) lets
-    * `dropDuplicatesWithinWatermark` evict a pair's key once the
-    * watermark passes it. At 100 TB/day: the settled side is never
-    * re-SIGNATURED (that is what the memo buys — the corpus pass);
-    * the join exchange itself re-runs per trigger, so at production
-    * scale the settled buckets would be persisted pre-partitioned by
-    * (band, bkey) (the bucketed-table pattern of `join_bucketed`) so
-    * each trigger's probe is co-located, leaving per-event cost at
-    * O(bands) lookups and state at horizon × match rate. The typed
-    * pass replaced a Catalyst array-lambda form whose
-    * CodegenFallback interpretation cost ~4 ms/document — the JVM
-    * loop is ~10× cheaper and keeps ingest cost linear in the BATCH
-    * with a constant that survives a 100× batch (slope table in
-    * BASELINE.md).
+  /** Streaming ingest-time near-dup flagging —
+    * [[dedupMinhashIncremental]] re-expressed so the arriving documents
+    * can be a STREAM: each document's hashed shingle set and band keys
+    * are computed in ONE stateless typed pass on the executor (the row
+    * kernel, [[hashedShingleSet]] then [[bandKeys]] — bit-for-bit the
+    * SQL expressions), so the stream side needs no aggregation at all;
+    * candidates come from a stream-static equi-join against the
+    * memoized settled band buckets, verification from a second
+    * stream-static join against the settled shingle sets, and the only
+    * streaming state is the pair dedup (a pair can match in several
+    * bands) — the event-time watermark (set here, after the flatMap: a
+    * typed map re-creates attributes, which strips upstream event-time
+    * metadata) lets `dropDuplicatesWithinWatermark` evict a pair's key
+    * once the watermark passes it. At 100 TB/day: the settled side is
+    * never re-SIGNATURED (that is what the memo buys — the corpus
+    * pass); the join exchange itself re-runs per trigger, so at
+    * production scale the settled buckets would be persisted
+    * pre-partitioned by (band, bkey) (the bucketed-table pattern of
+    * `join_bucketed`) so each trigger's probe is co-located, leaving
+    * per-event cost at O(bands) lookups and state at horizon × match
+    * rate. The typed pass replaced a Catalyst array-lambda form whose
+    * CodegenFallback interpretation cost ~4 ms/document — the JVM loop
+    * is ~10× cheaper and keeps ingest cost linear in the BATCH with a
+    * constant that survives a 100× batch (slope table in BASELINE.md).
     *
     * Works identically on a batch frame (the watermark node is
     * optimizer-eliminated and the pair dedup runs as a plain
@@ -1126,39 +1077,32 @@ object DedupOps {
       settledSets: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    // one JVM pass per document: shingles → 64-bit hashes → signature
-    // → band keys, emitted as Bands rows. [[hashShingle]]/[[bandKey]]
-    // replicate SQL xxhash64 bit-for-bit (seed 42, seed-chained for
-    // multi-argument), so the stream-side keys agree with the
-    // settled index the SQL aggregation built — the property the
-    // oracle gate checks end-to-end (a parity break empties the join)
+    // one JVM pass per document: the row kernel, emitted as Bands
+    // rows carrying the document's set. The kernel replicates SQL
+    // xxhash64 bit-for-bit (seed 42, seed-chained for multi-argument),
+    // so the stream-side keys agree with the settled index — the
+    // property the oracle gate checks end-to-end (a parity break
+    // empties the join). A shingle-less doc emits nothing, as in
+    // [[minhashSketch]].
     val exploded = docs.select(col("doc_id"), col("text"), col("ts"))
       .as[(Long, String, java.sql.Timestamp)]
       .flatMap { case (id, text, t) =>
-        val x64 = shingleStrings(text).map(hashShingle).toArray
-        // shingle-less doc → NOTHING, matching the batch index builders
-        // (a doc with no shingle rows never aggregates a signature);
-        // the all-P sentinel rows previously emitted here could never
-        // verify (J = 0) but wasted join work and pair-dedup state
-        if (x64.isEmpty) Nil
-        else {
-          val sig = signatureOf(x64.map(v => ((v % P) + P) % P))
-          (0 until Bands).map(b => (id, t, x64, x64.length, b, bandKey(sig, b)))
-        }
+        val hs = hashedShingleSet(text)
+        if (hs.isEmpty) Iterator.empty
+        else bandKeys(hs, Bands).iterator.zipWithIndex
+          .map { case (k, b) => (id, t, hs, hs.length, b, k) }
       }
-      .toDF("doc_n", "ts", "shn", "nn", "band", "bkey")
+      .toDF("doc_a", "ts", "ha", "na", "band", "bkey")
       .withWatermark("ts", "1 hour")
-    val p = settledSets.select(col("doc_id").as("doc_p"),
-      col("shset").as("shp"), col("n_sh").as("np"))
-    val verified = exploded
-      .join(settledBuckets.toDF("doc_p", "band", "bkey"), Seq("band", "bkey"))
-      .join(p, Seq("doc_p"))
-      .withColumn("inter", size(array_intersect(col("shn"), col("shp"))))
-      .withColumn("j", col("inter") / (col("nn") + col("np") - col("inter")))
-      .filter(col("j") >= 0.8)
-      .select(least(col("doc_n"), col("doc_p")).as("doc_a"),
-        greatest(col("doc_n"), col("doc_p")).as("doc_b"),
-        round(col("j"), 6).as("jaccard"), col("ts"))
+    val settled = settledSets.select(col("doc_id").as("doc_b"),
+      col("hs").as("hb"), col("n_sh").as("nb"))
+    val verified = jaccardAtLeast(exploded
+      .join(settledBuckets.toDF("doc_b", "band", "bkey"), Seq("band", "bkey"))
+      .join(settled, Seq("doc_b"))
+      .withColumn("inter", size(array_intersect(col("ha"), col("hb")))), 0.8)
+      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"),
+        col("jaccard"), col("ts"))
     // a pair's duplicate rows (one per colliding band) are
     // value-identical, so the watermark-bounded streaming dedup and
     // the plain batch dedup keep the same row; the within-watermark
@@ -2051,16 +1995,8 @@ object DedupOps {
   }
 
   def similarityHistogram(s: SparkSession, dir: String): DataFrame = {
-    val cand = ppjoinCandidatesAt(s, dir, 1, 2)
     val sets = hashedSets(s, dir)
-    val a = sets.select(col("doc_id").as("doc_a"), col("hs").as("ha"),
-      col("n_sh").as("na"))
-    val b = sets.select(col("doc_id").as("doc_b"), col("hs").as("hb"),
-      col("n_sh").as("nb"))
-    cand.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
-      .withColumn("inter", size(array_intersect(col("ha"), col("hb"))))
-      .withColumn("j", col("inter") / (col("na") + col("nb") - col("inter")))
-      .filter(col("j") >= 0.5)
+    verifyJaccard(ppjoinCandidatesAt(s, dir, 1, 2), sets, sets, 0.5)
       .groupBy((floor(col("j") * 10) / 10).as("bucket"))
       .agg(count(lit(1)).as("n_pairs"))
   }

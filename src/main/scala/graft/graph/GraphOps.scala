@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.Q
 import graft.text.TextAnalysis
 
 /** Link-analysis operators over graphs derived from the fixture

@@ -130,12 +130,10 @@ object RetrievalOps {
 
   // ---- embedding outliers ------------------------------------------
 
-  private val OutlierFactor = 1.5 // flag dist > factor × mean dist
-
   /** Euclidean distance of every embedding to the corpus centroid,
-    * flagged as an outlier when the distance exceeds
-    * [[OutlierFactor]] × the mean distance. The centroid (dim rows)
-    * and the threshold (1 row) broadcast back onto the scan — the
+    * flagged as an outlier when the distance exceeds 1.5 × the mean
+    * distance (⌈3·mean/2⌉ in integer micro units). The centroid (dim
+    * rows) and the threshold (1 row) broadcast back onto the scan — the
     * corpus itself shuffles only on vec_id for the per-vector sum.
     * All sums are DECIMAL(18,6) of rounded terms, so centroid,
     * distances, and threshold are bit-identical across engines.

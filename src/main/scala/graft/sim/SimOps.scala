@@ -651,20 +651,6 @@ object SimOps {
         r.getSeq[Float](1).map(_.toDouble).toArray))
       .sortBy(_._1).map(_._2)
 
-  /** Full squared L2 between subspace `m` of float-vector column `v`
-    * and codeword `cw`, factored as (‖v‖² − 2·⟨v,cw⟩) + ‖cw‖² with
-    * each inner product a codegen'd [[vecDot]] over the `slice`d
-    * subvector and ‖cw‖² a plan-time literal (ascending Scala fold ==
-    * the oracle's list_sum order). Same evaluation order as the
-    * oracle's `(ss − 2·sc) + cc`, so the doubles match bit for bit.
-    */
-  private def pqD2(v: Column, cw: Array[Double], m: Int): Column = {
-    val sub = slice(v, m * PqSub + 1, PqSub)
-    val cws = cw.slice(m * PqSub, m * PqSub + PqSub)
-    val cc = cws.map(x => x * x).sum
-    (vecDot(sub, sub) - lit(2.0) * vecDot(sub, typedlit(cws.map(_.toFloat).toSeq))) + lit(cc)
-  }
-
   /** Encode the corpus to PQ codes: per (vector, subspace), the
     * argmin-distance codeword (first index on ties —
     * `array_position` finds the first match, mirroring the oracle's
@@ -758,7 +744,8 @@ object SimOps {
     // the giant 384-dot explode expression whose single generated
     // method crossed Janino's 64 KB limit (harmless at 10 rows, but
     // the fallback WARN would mask a real corpus-sized one). The
-    // arithmetic replicates pqD2 term for term: (ss − 2·sc) + cc,
+    // arithmetic is the oracle's factored form term for term:
+    // (ss − 2·sc) + cc,
     // every sum an ascending-index fold, rounded HALF_UP to 6 dp into
     // DECIMAL(18,6) — bit-identical to the oracle.
     val qs = Tables.embeddings(s, dir)
@@ -854,7 +841,7 @@ object SimOps {
   /** Oracle building block: squared L2 between subspace `m` (0-based
     * SQL expr `mm.m`) of `vecExpr` and codeword list `cb.cw`, in the
     * same factored (ss − 2·sc) + cc form and index-ascending
-    * summation as [[pqD2]].
+    * summation as [[pqDistTable]]'s driver-side cells.
     */
   private def pqD2Sql(vecExpr: String): String =
     s"""(list_sum(list_transform(range(1, ${PqSub + 1}),

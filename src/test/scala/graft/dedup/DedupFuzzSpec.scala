@@ -31,7 +31,7 @@ class DedupFuzzSpec extends AnyFunSuite {
       .select("doc_id", "text").collect()
     docs.iterator
       .map(r => r.getLong(0) ->
-        DedupOps.shingleStrings(r.getString(1)).map(DedupOps.hashShingle).toSet)
+        DedupOps.hashedShingleSet(r.getString(1)).toSet)
       .filter(_._2.nonEmpty)
       .toMap
   }

@@ -20,10 +20,10 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("typed JVM hashing matches the SQL expression forms bit-for-bit") {
-    // the streaming ingest path hashes on the executor in a typed
-    // pass; its keys must land in the SAME buckets as the SQL-built
-    // settled index — pin hashShingle/signatureOf/bandKey against
-    // the expression forms on real fixture documents
+    // every MinHash path hashes on the executor through the typed row
+    // kernel (hashedShingleSet, then bandKeys); pin both steps — and
+    // the signature between them — against the SQL expression forms
+    // on real fixture documents
     import spark.implicits._
     val docs = graft.Tables.documents(spark, sfSmall)
       .select(col("doc_id"), col("text")).as[(Long, String)]
@@ -46,19 +46,43 @@ class DedupSpec extends AnyFunSuite {
       .toMap
     var nonTrivial = 0
     docs.foreach { case (id, text) =>
-      val x64 = DedupOps.shingleStrings(text).map(DedupOps.hashShingle).toArray
+      val x64 = DedupOps.hashedShingleSet(text)
       val sig = DedupOps.signatureOf(
         x64.map(v => ((v % 2147483647L) + 2147483647L) % 2147483647L))
       val (sqlX64, sqlSig, sqlBands) = got(id)
       assert(x64.toSeq == sqlX64, s"doc $id shingle hashes diverge")
       assert(sig.toSeq == sqlSig, s"doc $id signature diverges")
-      (0 until DedupOps.Bands).foreach { b =>
-        assert(DedupOps.bandKey(sig, b) == sqlBands(b),
-          s"doc $id band $b key diverges")
-      }
+      assert(DedupOps.bandKeys(x64, DedupOps.Bands).toSeq == sqlBands,
+        s"doc $id band keys diverge")
       if (x64.nonEmpty) nonTrivial += 1
     }
     assert(nonTrivial > 10, "fixture slice should have shingled docs")
+  }
+
+  test("refused-admission verification sets: stateless, same sets, same pairs") {
+    // past the admission bound hashedSets serves the corpus sketch
+    // unpersisted, so every reference re-runs it: it must stay a
+    // shuffle-free per-document pass and verify exactly like the memo
+    DedupOps.clearSubstrateCache()
+    val refused = DedupOps.corpusSketch(spark, sfSmall)
+    val plan = refused.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange") && !plan.contains("collect_set"),
+      s"refused-branch sets shuffle:\n$plan")
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val exact = pairs(DedupOps.ngramJaccard(spark, sfSmall))
+    assert(exact.nonEmpty, "fixture should contain planted near-dups")
+    assert(pairs(DedupOps.minhashPairs(refused)) == exact)
+    assert(pairs(DedupOps.verifyJaccard(
+      DedupOps.prefixFilterCandidates(spark, sfSmall), refused, refused, 0.8)
+      .select("doc_a", "doc_b", "jaccard")) == exact)
+    def setsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> (r.getSeq[Long](1).toSet, r.getInt(2))).toMap
+    val refusedSets = setsOf(refused)
+    val admitted = DedupOps.hashedSets(spark, sfSmall)
+    assert(admitted.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "sf0.01 sets should be admitted to the memo")
+    assert(refusedSets == setsOf(admitted))
   }
 
   test("incremental minhash equals the full recompute's cross-boundary slice") {

@@ -12,7 +12,7 @@ val picks = Seq(
   "source_partition_pruned" -> "day filter resolved against directory names at plan time",
   "sort_limit" -> "global top-k as TakeOrderedAndProject (per-partition heaps, no full sort)",
   "sample_per_group" -> "rank<=k under a window engages WindowGroupLimit before the sort",
-  "dedup_minhash" -> "banded LSH: the band index is ONE stateless typed pass per document (DeserializeToObject/MapPartitions, no 96-column aggregate, sub-MiB task binary); candidate generation is an equi join on band keys, never all-pairs",
+  "dedup_minhash" -> "banded LSH: band keys are ONE stateless typed pass per document (DeserializeToObject/MapPartitions, no 96-column aggregate, sub-MiB task binary) over the verification-set memo, the corpus sketch (InMemoryRelation); candidate generation is an equi join on band keys, never all-pairs",
   "tfidf" -> "tf-idf: df is a groupBy(term) table broadcast-joined back onto the memoized tf frame - NO Window in the plan, so a hot term ('the') never lands one partition",
   "dedup_containment_ppjoin" -> "asymmetric PPJoin rung (r9): length + ROW-LEVEL positional filters inside the prefix-bag equi join (pruned rows never shuffle), then the multi-witness count at the pair aggregate - 119x fewer candidates than the plain containment prefix reach the full-set verify",
   "cosine_topk_ivf" -> "IVF: broadcast centroid cross, inverted-list equi join, windowed top-k",
@@ -41,7 +41,7 @@ val picks = Seq(
   "cosine_topk_lsh_mp" -> "multi-probe LSH: the query side explodes x(1+B) probe masks (bitwise-xor on the bucket id), the corpus-side index is the SAME bucket frame as single-probe - recall is bought on the probe side, candidates still flow through one (tbl,bucket) equi join",
   "stream_enrich" -> "stream-static enrichment twin: fact scan joins the broadcast dim then folds into the windowed partial+final aggregate - zero join state, the dim never shuffles the fact side",
   "stream_interval_join" -> "stream-stream interval join twin: equi join on user_id with the time-range bound as join residual - hash join, never a nested loop; in streaming form the same condition makes both buffers watermark-evictable",
-  "dedup_minhash_incr" -> "incremental MinHash maintenance: BOTH settled frames read from the session cache (InMemoryRelation - the persisted band index), batch signatures aggregate over the batch slice only, candidates from one (band,bkey) equi join against the settled buckets",
+  "dedup_minhash_incr" -> "incremental MinHash maintenance: BOTH settled frames read from the session cache (InMemoryRelation - the persisted band index), the batch slice's sketch and band keys are typed per-row passes (no aggregation), candidates from one (band,bkey) equi join against the settled buckets",
   "stream_neardup" -> "streaming ingest twin: the arriving docs run ONE typed pass (DeserializeToObject/MapPartitions - per-row signatures, no aggregation), then two equi joins against the cached settled index; the only other operator is the pair dedup - in streaming form that is the watermark-bounded state",
   "dedup_minhash_incr_durable" -> "durable-table maintenance (r10): the settled band index is a bucketed+sorted TABLE (FileScan ... Bucketed: true) - the batch keys broadcast onto the table scan, so the corpus side has NO exchange and NO cache-residency dependence; verification sets come from the sets table",
   "token_entropy" -> "per-source entropy (r10): per-source totals are a second groupBy broadcast-joined back (n_sources rows) - NO per-source Window, so a vocab-sized partition sort can never exist",
