@@ -300,6 +300,7 @@ object DedupOps {
     scala.collection.mutable.Map[(SparkSession, String), Boolean]()
 
   private[dedup] def hashedSets(s: SparkSession, dir: String): DataFrame = {
+    lazy val sketch = corpusSketch(s, dir)
     val key = (s, dir)
     val known = setsAdmission.synchronized {
       setsAdmission.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
@@ -309,15 +310,14 @@ object DedupOps {
       // cells = Σ n_sh, one (doc, shingle) per cell; one job, outside
       // the lock, per the KeyedMemo rule: never run Spark jobs under a
       // memo lock
-      val cells = corpusSketch(s, dir)
-        .agg(coalesce(sum(col("n_sh")), lit(0L))).head().getLong(0)
+      val cells = sketch.agg(coalesce(sum(col("n_sh")), lit(0L))).head().getLong(0)
       val a = cells * 8L * 50 <= Runtime.getRuntime.maxMemory
       setsAdmission.synchronized { setsAdmission.update(key, a) }
       a
     }
-    if (!admit) corpusSketch(s, dir)
+    if (!admit) sketch
     else substrate("hashed_sets", s, dir) {
-      val sets = corpusSketch(s, dir)
+      val sets = sketch
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       sets.count() // materialize once (cold-race discipline of the family)
       sets
