@@ -31,13 +31,16 @@ import java.nio.file.{Files, Paths}
   *    (loadavg series, pass spread) and see what was re-timed.
   */
 object Bench {
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   private def loadAvg(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
   /** Parse the "queries" map of a prior bench_out.json line (our own
     * single-line format) without a JSON library: `"name":12.345` pairs
     * inside the first {...} after `"queries":`. Returns empty on any
-    * shape surprise — the prior is advisory only.
+    * shape surprise — the prior is advisory only, so an unreadable
+    * file is logged at WARN, not fatal.
     */
   private def parsePrior(path: String): Map[String, Double] =
     try {
@@ -54,7 +57,11 @@ object Bench {
           pair.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble).toMap
         }
       }
-    } catch { case _: Throwable => Map.empty }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        log.warn(s"ignoring unreadable prior bench record $path: $e")
+        Map.empty
+    }
 
   def main(args: Array[String]): Unit = {
     val spark = MainSession.build(defaultCpus = "32")

@@ -101,8 +101,7 @@ object IvmTiming {
     // is warm — the durable-cluster leg below runs from fully cold
     // state and must not re-derive the pair generator (a corpus-sized
     // shuffle per cold run at the 1000×-docs fixture)
-    val batchPath =
-      s"${sys.props("java.io.tmpdir")}/graft-src/ivm/batch_${Tables.dirKey(dir)}"
+    val batchPath = Staged.path("ivm-batch", dir)
     pairs.filter(isNew)
       .select(col("doc_a").as("node"), col("doc_b").as("label"))
       .write.mode("overwrite").parquet(batchPath)

@@ -25,32 +25,25 @@ object Tables {
     * that (one file, one row group). Counting is bounded: once the
     * file count alone reaches `atLeast` no footer is opened, so at
     * real scale (thousands of files) this is a directory listing,
-    * not a metadata sweep. Cached per path — layout is immutable for
-    * a fixture's lifetime — but only when the count succeeds: a failed
-    * listing or footer read is logged at WARN and answers `atLeast`
-    * ("assume parallel enough", so no fan-out) for this call alone,
-    * and the next call retries.
+    * not a metadata sweep. Memoized per (session, path) in a value
+    * [[KeyedMemo]] — layout is immutable for a fixture's lifetime —
+    * which stores only a successful count: a failed listing or footer
+    * read is logged at WARN and answers `atLeast` ("assume parallel
+    * enough", so no fan-out) for this call alone, and the next call
+    * retries.
     */
-  private val scanUnitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private val scanUnitMemo = KeyedMemo.values[Int]()
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private[graft] def scanUnits(s: SparkSession, path: String, atLeast: Int): Int = {
-    val key = path + "#" + atLeast
-    val cached = scanUnitCache.get(key)
-    if (cached != null) cached.intValue()
-    else try {
-      val n = countScanUnits(s, path, atLeast)
-      scanUnitCache.putIfAbsent(key, Integer.valueOf(n))
-      n
-    } catch {
+  private[graft] def scanUnits(s: SparkSession, path: String, atLeast: Int): Int =
+    try scanUnitMemo(s"scan_units#$atLeast", s, path)(countScanUnits(s, path, atLeast))
+    catch {
       case scala.util.control.NonFatal(e) =>
         log.warn(s"scan-unit count failed for $path; assuming $atLeast " +
           s"(no map-side fan-out) for this scan: $e")
         atLeast
     }
-  }
 
   private def countScanUnits(s: SparkSession, path: String, atLeast: Int): Int = {
     val conf = s.sessionState.newHadoopConf()
@@ -207,5 +200,69 @@ object Tables {
     // bench log). The prefix keeps the key identifier-safe and
     // injective while never colliding with the hidden-file rule.
     s"d${dir.replaceAll("[^a-zA-Z0-9]", "_")}_$h"
+  }
+}
+
+/** The one writer of on-disk fixture copies: every derived copy of a
+  * fixture dir (re-encoded formats, layouts, TxLog tables, raw text,
+  * durable indexes) lands at `$tmp/graft-src/<kind>/…<dirKey>…`, so
+  * one walk of that root finds every copy of a fixture. Each copy is
+  * written once — a directory once per JVM, a bucketed table once per
+  * catalog — behind a lock on its own path, never a module-wide lock
+  * held across Spark writes: copies of different keys stage
+  * concurrently, and a body may stage another key (the MinHash
+  * buckets table reads the sets table). Whatever a crashed run left at
+  * the path is deleted before the write, and a write that throws
+  * marks nothing, so the next call writes again.
+  */
+private[graft] object Staged {
+  private val root = s"${sys.props("java.io.tmpdir")}/graft-src"
+
+  /** path → fixture dir of every copy staged in this JVM; for
+    * directories this is also the written-once mark.
+    */
+  private val staged = scala.collection.mutable.Map[String, String]()
+  private val locks = scala.collection.mutable.Map[String, AnyRef]()
+
+  private[graft] def stagedFor(dir: String): Seq[String] =
+    staged.synchronized { staged.collect { case (p, d) if d == dir => p }.toSeq.sorted }
+
+  /** Where a directory copy of kind `kind` for `dir` lives. */
+  def path(kind: String, dir: String): String = s"$root/$kind/${Tables.dirKey(dir)}"
+
+  private def once(out: String, dir: String)(done: => Boolean)(write: => Unit): Unit =
+    locks.synchronized(locks.getOrElseUpdate(out, new Object)).synchronized {
+      if (!done) {
+        val f = new java.io.File(out)
+        if (f.exists) org.apache.commons.io.FileUtils.forceDelete(f)
+        write
+        staged.synchronized { staged(out) = dir }
+      }
+    }
+
+  /** A directory copy, written by `write(path)` once per JVM. */
+  def dir(kind: String, fixtureDir: String)(write: String => Unit): String = {
+    val out = path(kind, fixtureDir)
+    once(out, fixtureDir)(staged.synchronized(staged.contains(out)))(write(out))
+    out
+  }
+
+  /** A bucketed (and sorted) external table `graft_<name>_<dirKey>`,
+    * written from `df` once per catalog. Bucket metadata lives in the
+    * session catalog — `spark.table` reads recover the layout, plain
+    * path reads would not — hence `saveAsTable`, not `.parquet(path)`.
+    * Rows sort by `by`, then by `thenBy`.
+    */
+  def table(s: SparkSession, kind: String, dir: String, name: String,
+      buckets: Int, by: String, thenBy: String*)(df: => DataFrame): DataFrame = {
+    val table = s"graft_${name}_${Tables.dirKey(dir)}"
+    val out = s"$root/$kind/$table"
+    once(out, dir)(s.catalog.tableExists(table)) {
+      df.write.mode("overwrite")
+        .bucketBy(buckets, by).sortBy(by, thenBy: _*)
+        .option("path", out)
+        .saveAsTable(table)
+    }
+    s.table(table)
   }
 }

@@ -27,6 +27,8 @@ object DedupOps {
 
   import graft.text.TextOps.tokens
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   private val tokensSql = "regexp_extract_all(lower(text), '[a-z]+')"
 
   /** Exact dedup by content hash: one representative (min doc_id) per
@@ -84,10 +86,7 @@ object DedupOps {
     * (spills, never OOMs) and exists for multi-query sweeps over one
     * dataset; a single 100 TB query pays exactly one pass either way.
     */
-  private val substrate = new graft.KeyedMemo
-
-  /** Test hook: drop the substrate memo (cold-path races). */
-  private[graft] def clearSubstrateCache(): Unit = substrate.clear()
+  private val substrate = graft.KeyedMemo.frames()
 
   /** One row per (document, distinct shingle) with the doc's shingle
     * count — a typed flatMap: a single JVM pass per document, emitted
@@ -296,24 +295,14 @@ object DedupOps {
     * reads the same stateless sketch, whose re-runs cost one pass over
     * the documents each.
     */
-  private val setsAdmission =
-    scala.collection.mutable.Map[(SparkSession, String), Boolean]()
+  private val admission = graft.KeyedMemo.values[Boolean]()
 
   private[dedup] def hashedSets(s: SparkSession, dir: String): DataFrame = {
     lazy val sketch = corpusSketch(s, dir)
-    val key = (s, dir)
-    val known = setsAdmission.synchronized {
-      setsAdmission.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      setsAdmission.get(key)
-    }
-    val admit = known.getOrElse {
-      // cells = Σ n_sh, one (doc, shingle) per cell; one job, outside
-      // the lock, per the KeyedMemo rule: never run Spark jobs under a
-      // memo lock
+    val admit = admission("sets_admission", s, dir) {
+      // cells = Σ n_sh, one (doc, shingle) per cell
       val cells = sketch.agg(coalesce(sum(col("n_sh")), lit(0L))).head().getLong(0)
-      val a = cells * 8L * 50 <= Runtime.getRuntime.maxMemory
-      setsAdmission.synchronized { setsAdmission.update(key, a) }
-      a
+      cells * 8L * 50 <= Runtime.getRuntime.maxMemory
     }
     if (!admit) sketch
     else substrate("hashed_sets", s, dir) {
@@ -923,38 +912,25 @@ object DedupOps {
     *    constant ~100× below re-signaturing the corpus, and — the
     *    point — INDEPENDENT of what happens to be cache-resident.
     *
-    * Written once per (JVM, fixture dir) through the session catalog
-    * (the [[graft.sources.Bucketed]] discipline — bucket metadata
-    * lives in the catalog, so only `spark.table` reads recover the
-    * layout). True O(batch) PAGE reads would need a point-lookup
-    * store (the B-tree shape `source_jdbc` demonstrates); for a
-    * daily-crawl batch whose band keys hash uniformly over the key
+    * Staged once per fixture dir as bucketed catalog tables
+    * ([[graft.Staged.table]] — bucket metadata lives in the catalog,
+    * so only `spark.table` reads recover the layout); the buckets
+    * table is derived from the sets table, not from the corpus. True
+    * O(batch) PAGE reads would need a point-lookup store (the B-tree
+    * shape `source_jdbc` demonstrates); for a daily-crawl batch whose band keys hash uniformly over the key
     * space that rung only pays when batch ≪ page count — below that
     * crossover the streaming scan here reads every page exactly once,
     * which is also what a B-tree would do.
     */
   private[graft] def settledMinhashTables(
-      s: SparkSession, dir: String): (DataFrame, DataFrame) = synchronized {
-    val key = graft.Tables.dirKey(dir)
-    val bucketsName = s"graft_ivm_mh_buckets_$key"
-    val setsName = s"graft_ivm_mh_sets_$key"
-    if (!s.catalog.tableExists(setsName)) {
+      s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    def sets = graft.Staged.table(s, "ivm", dir, "ivm_mh_sets", IvmBuckets, "doc_id") {
       minhashSketch(incSlice(s, dir, batch = false))
-        .write.mode("overwrite")
-        .bucketBy(IvmBuckets, "doc_id").sortBy("doc_id")
-        .option("path",
-          s"${sys.props("java.io.tmpdir")}/graft-src/ivm/$setsName")
-        .saveAsTable(setsName)
     }
-    if (!s.catalog.tableExists(bucketsName)) {
-      bandRows(s.table(setsName), Bands)
-        .write.mode("overwrite")
-        .bucketBy(IvmBuckets, "bkey").sortBy("bkey")
-        .option("path",
-          s"${sys.props("java.io.tmpdir")}/graft-src/ivm/$bucketsName")
-        .saveAsTable(bucketsName)
+    val buckets = graft.Staged.table(s, "ivm", dir, "ivm_mh_buckets", IvmBuckets, "bkey") {
+      bandRows(sets, Bands)
     }
-    (s.table(bucketsName), s.table(setsName))
+    (buckets, sets)
   }
 
   /** [[dedupMinhashIncremental]] against the DURABLE settled index —
@@ -1002,18 +978,10 @@ object DedupOps {
     * a daily pipeline owns for months, which is storage, not cache.
     * Bucketed+sorted by node (the contraction's join key).
     */
-  private[graft] def settledStarsTable(
-      s: SparkSession, dir: String): DataFrame = synchronized {
-    val name = s"graft_ivm_stars_${graft.Tables.dirKey(dir)}"
-    if (!s.catalog.tableExists(name)) {
+  private[graft] def settledStarsTable(s: SparkSession, dir: String): DataFrame =
+    graft.Staged.table(s, "ivm", dir, "ivm_stars", IvmBuckets, "node") {
       settledStars(s, dir)
-        .write.mode("overwrite")
-        .bucketBy(IvmBuckets, "node").sortBy("node")
-        .option("path", s"${sys.props("java.io.tmpdir")}/graft-src/ivm/$name")
-        .saveAsTable(name)
     }
-    s.table(name)
-  }
 
   /** [[dedupClustersIncremental]] against the DURABLE star table —
     * same recompute identity (labels ≡ the full transitive-closure
@@ -1138,11 +1106,7 @@ object DedupOps {
     * `dedup_minhash`) never read this cache: they are the thing being
     * measured.
     */
-  private val pairMemo = new graft.KeyedMemo
-  /** Test hook: drop cached pair frames so a spec can race the
-    * cold-miss path deliberately.
-    */
-  private[graft] def clearPairCache(): Unit = pairMemo.clear()
+  private val pairMemo = graft.KeyedMemo.frames()
 
   def verifiedPairs(s: SparkSession, dir: String): DataFrame =
     pairMemo("verified_pairs", s, dir) {
@@ -1331,14 +1295,18 @@ object DedupOps {
     * a NEWER eager reliable checkpoint exists: that one is
     * self-contained on stable storage, so no live lineage can reach
     * the older files. The NEWEST checkpoint is never deleted here —
-    * it may back the frame returned to the caller.
+    * it may back the frame returned to the caller. A failed delete
+    * leaks only disk, so it is logged at WARN and the loop goes on.
     */
   private def deleteCheckpoints(s: SparkSession, paths: Seq[String]): Unit =
     paths.foreach { p =>
       try {
         val path = new org.apache.hadoop.fs.Path(p)
         path.getFileSystem(s.sparkContext.hadoopConfiguration).delete(path, true)
-      } catch { case _: Throwable => () }
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          log.warn(s"could not delete superseded checkpoint $p: $e")
+      }
     }
 
   def connectedComponents(pairs: DataFrame, checkpointInterval: Int = 0): DataFrame = {

@@ -49,10 +49,7 @@ object GraphOps {
     * (lineage truncation). Locking discipline lives in
     * [[graft.KeyedMemo]] (one copy JVM-wide, not per-module).
     */
-  private val memo = new graft.KeyedMemo
-
-  /** Test hook: drop the memo so a spec can race the cold-miss path. */
-  private[graft] def clearResultCache(): Unit = memo.clear()
+  private val memo = graft.KeyedMemo.frames()
 
   def pageRank(s: SparkSession, dir: String): DataFrame =
     memo("pagerank", s, dir)(pageRankUncached(s, dir))

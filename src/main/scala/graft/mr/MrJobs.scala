@@ -52,22 +52,17 @@ object MrJobs {
 
   /** One-time materialization of documents.text as raw .txt files —
     * the reference's native input format (its upload filter accepts
-    * only .txt, reference upload_data.py:48). Written once per
-    * (JVM, fixture dir) under the system temp dir so the raw-file
+    * only .txt, reference upload_data.py:48). Staged once per
+    * fixture dir ([[graft.Staged]], kind `raw`) so the raw-file
     * queries below exercise the bytes-from-disk path the reference's
     * worker actually runs (reference worker.py:129-145), while their
     * DuckDB oracles keep reading the same documents parquet.
     */
-  private val rawDirs = scala.collection.mutable.Map[String, String]()
-  def rawTextDir(s: SparkSession, dir: String): String = synchronized {
-    rawDirs.getOrElseUpdate(dir, {
-      val key = graft.Tables.dirKey(dir)
-      val out = s"${sys.props("java.io.tmpdir")}/graft-raw/$key"
+  def rawTextDir(s: SparkSession, dir: String): String =
+    graft.Staged.dir("raw", dir) { out =>
       Tables.documents(s, dir).select("text")
         .write.mode("overwrite").text(out)
-      out
-    })
-  }
+    }
 
   /** Word count over raw file BYTES — the reference's primary entry
     * path end-to-end: whole-file scan (S1) → custom record iterator

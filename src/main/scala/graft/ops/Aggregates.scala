@@ -796,7 +796,8 @@ object Aggregates {
     */
   def anomalyZscore(s: SparkSession, dir: String): DataFrame = {
     // eventsSpread: all three consumers key on user_id, so the one
-    // fan-out exchange feeds the whole plan (r12: 0.80→0.61 s)
+    // fan-out exchange feeds the whole plan (r12 bench records:
+    // 0.529→0.462 s)
     val e = Tables.eventsSpread(s, dir)
       .select(col("event_id"), col("user_id"), col("value"))
     val med = e.groupBy("user_id")

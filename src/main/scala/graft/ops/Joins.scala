@@ -429,10 +429,7 @@ object Joins {
     * its multi-job loop on every repeated call in one session.
     * Locking discipline lives in [[graft.KeyedMemo]].
     */
-  private val erMemo = new graft.KeyedMemo
-
-  /** Test hook: drop the memo so a spec can race the cold-miss path. */
-  private[graft] def clearErCache(): Unit = erMemo.clear()
+  private val erMemo = graft.KeyedMemo.frames()
 
   def entityResolution(s: SparkSession, dir: String): DataFrame =
     erMemo("entity_resolution", s, dir) {

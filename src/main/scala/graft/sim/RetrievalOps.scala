@@ -219,10 +219,7 @@ object RetrievalOps {
     * norm² and dot products are DECIMAL(18,6) sums of rounded terms
     * (exact, order-free); the cosine divides identical doubles.
     */
-  private val memo = new graft.KeyedMemo
-
-  /** Test hook: drop the memo so ConcurrencySpec can race it cold. */
-  private[graft] def clearRetrievalCache(): Unit = memo.clear()
+  private val memo = graft.KeyedMemo.frames()
 
   /** The df-capped tf-idf bigram postings behind [[sparseCosinePairs]],
     * memoized per (session, dataset) under the KeyedMemo discipline:

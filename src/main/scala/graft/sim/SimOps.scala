@@ -279,9 +279,7 @@ object SimOps {
     * ingest. One copy of the locking rules ([[graft.KeyedMemo]]);
     * ConcurrencySpec races the cold-miss path.
     */
-  private val annMemo = new graft.KeyedMemo
-  /** Test hook: drop settled ANN index state (cold-path races). */
-  private[graft] def clearAnnCache(): Unit = annMemo.clear()
+  private val annMemo = graft.KeyedMemo.frames()
 
   /** Settled IVF inverted lists: nearest-centroid assignment of the
     * OLD corpus only (vec_id ≢ [[graft.dedup.DedupOps.IncBatchMod]]

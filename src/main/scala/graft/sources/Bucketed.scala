@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Staged, Tables}
 
 /** Storage-layout levers: bucketing and partition pruning.
   *
@@ -24,39 +24,24 @@ import graft.{Q, Tables}
   *    `PartitionFilters`, pinned in BucketedSpec).
   *
   * Both round-trips are under the differential gate: the bucketed /
-  * partitioned copies are written once per (JVM, fixture dir) and the
-  * DuckDB oracle computes from the ORIGINAL parquet, so a row lost or
-  * re-typed by the layout step flips the check.
+  * partitioned copies are staged once per fixture dir
+  * ([[graft.Staged]]) and the DuckDB oracle computes from the
+  * ORIGINAL parquet, so a row lost or re-typed by the layout step
+  * flips the check.
   */
 object Bucketed {
 
   private val Buckets = 8
 
-  private def ident(dir: String): String = graft.Tables.dirKey(dir)
-
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
-  /** Writes a projected copy of `table` as a bucketed+sorted external
-    * table (idempotent per JVM+dir). Bucket metadata lives in the
-    * session catalog — `spark.table` reads recover the layout, plain
-    * path reads would not, which is why this goes through
-    * `saveAsTable` and not `.parquet(path)`.
-    */
+  /** A projected copy of `table`, bucketed and sorted on `key`. */
   private[sources] def bucketedTable(
       s: SparkSession, dir: String, table: String, key: String,
-      cols: Seq[String]): String = synchronized {
-    val name = s"graft_b_${table}_${ident(dir)}"
-    if (!s.catalog.tableExists(name)) {
-      val path = s"${sys.props("java.io.tmpdir")}/graft-src/bucketed/$name"
-      Tables.load(s, dir, table)
-        .select(cols.map(col): _*)
-        .write.mode("overwrite")
-        .bucketBy(Buckets, key).sortBy(key)
-        .option("path", path)
-        .saveAsTable(name)
+      cols: Seq[String]): DataFrame =
+    Staged.table(s, "bucketed", dir, s"b_$table", Buckets, key) {
+      Tables.load(s, dir, table).select(cols.map(col): _*)
     }
-    name
-  }
 
   /** Fact-to-fact join on the bucket key: lineitem ⋈ orders with both
     * sides pre-bucketed on orderkey. The join plans as a sort-merge
@@ -66,10 +51,10 @@ object Bucketed {
     * post-join priority rollup. BucketedSpec pins exactly that shape.
     */
   def joinBucketed(s: SparkSession, dir: String): DataFrame = {
-    val l = s.table(bucketedTable(s, dir, "lineitem", "l_orderkey",
-      Seq("l_orderkey", "l_extendedprice", "l_discount")))
-    val o = s.table(bucketedTable(s, dir, "orders", "o_orderkey",
-      Seq("o_orderkey", "o_orderpriority")))
+    val l = bucketedTable(s, dir, "lineitem", "l_orderkey",
+      Seq("l_orderkey", "l_extendedprice", "l_discount"))
+    val o = bucketedTable(s, dir, "orders", "o_orderkey",
+      Seq("o_orderkey", "o_orderpriority"))
     l.join(o, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))
       .agg(
@@ -78,34 +63,27 @@ object Bucketed {
           .cast("double").as("revenue"))
   }
 
-  private val written = scala.collection.mutable.Set[String]()
-
-  /** Events re-laid-out as day-partitioned parquet, once per
-    * (JVM, dir). `day` is a directory key, not a data column — the
+  /** Events re-laid-out as day-partitioned parquet, staged once per
+    * dir. `day` is a directory key, not a data column — the
     * 30 fixture days become 30 directories, the shape a 100 TB event
     * log actually has. The key is the UTC-calendar day computed from
     * the raw epoch micros (floor division, so pre-1970 instants also
     * land on their calendar day) — NOT date_format, which renders in
     * the session timezone: a non-UTC session writing this layout
-    * first would shift every partition boundary, and the per-JVM
-    * `written` memo would then pin the shifted copy for every later
+    * first would shift every partition boundary, and the staged copy
+    * (written once per JVM) would then pin the shift for every later
     * gated run. The oracle's timezone-naive CAST(ts AS DATE) sees the
     * same UTC day by construction.
     */
   private[sources] def partitionedEventsDir(s: SparkSession, dir: String): String =
-    synchronized {
-      val out = s"${sys.props("java.io.tmpdir")}/graft-src/part_events/${ident(dir)}"
-      if (!written.contains(out)) {
-        val utcDay = expr("date_add(DATE'1970-01-01', " +
-          "CAST((unix_micros(ts) - pmod(unix_micros(ts), 86400000000)) " +
-          "div 86400000000 AS INT))")
-        Tables.events(s, dir)
-          .select(col("event_id"), col("event_type"), col("value"),
-            utcDay.cast("string").as("day"))
-          .write.mode("overwrite").partitionBy("day").parquet(out)
-        written += out
-      }
-      out
+    Staged.dir("part_events", dir) { out =>
+      val utcDay = expr("date_add(DATE'1970-01-01', " +
+        "CAST((unix_micros(ts) - pmod(unix_micros(ts), 86400000000)) " +
+        "div 86400000000 AS INT))")
+      Tables.events(s, dir)
+        .select(col("event_id"), col("event_type"), col("value"),
+          utcDay.cast("string").as("day"))
+        .write.mode("overwrite").partitionBy("day").parquet(out)
     }
 
   /** One-day rollup over the partitioned layout. The day predicate is

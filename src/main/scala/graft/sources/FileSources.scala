@@ -2,16 +2,17 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Q, Staged, Tables}
 
 /** CSV and JSON *source* coverage — the "other formats" row of
   * SURVEY.md §2.1. The reference ingests only raw text (its upload
   * filter accepts .txt, reference upload_data.py:48); a Spark-native
   * engine must also read the interchange formats a pipeline actually
   * receives. `events` is round-tripped through each format once per
-  * (JVM, fixture dir) and aggregated from the read-back copy, while
-  * the DuckDB oracle aggregates the original parquet — so the
-  * format round-trip itself is under the differential gate.
+  * fixture dir (one [[graft.Staged]] copy each) and aggregated from
+  * the read-back copy, while the DuckDB oracle aggregates the original
+  * parquet — so the format round-trip itself is under the
+  * differential gate.
   *
   * Schema discipline: both readers get an explicit schema (never
   * inferSchema — at 100 TB schema inference is an extra full scan,
@@ -21,16 +22,12 @@ import graft.{Q, Tables}
   */
 object FileSources {
 
-  private val written = scala.collection.mutable.Set[String]()
-
-  /** Events projection written once per (JVM, dir, format); returns
-    * the directory of text files. Timestamps as unix micros, matching
+  /** Events projection staged once per (dir, format); returns the
+    * directory of text files. Timestamps as unix micros, matching
     * DuckDB's epoch_us(ts).
     */
-  private def eventsAs(s: SparkSession, dir: String, format: String): String = synchronized {
-    val key = Tables.dirKey(dir)
-    val out = s"${sys.props("java.io.tmpdir")}/graft-src/$format/$key"
-    if (!written.contains(out)) {
+  private def eventsAs(s: SparkSession, dir: String, format: String): String =
+    Staged.dir(format, dir) { out =>
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), unix_micros(col("ts")).as("ts_us"))
@@ -38,10 +35,7 @@ object FileSources {
         .option("header", "true")   // no-op for json/xml
         .option("rowTag", "event")  // no-op for csv/json
         .format(format).save(out)
-      written += out
     }
-    out
-  }
 
   private val eventsDdl =
     "event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, ts_us BIGINT"
@@ -88,18 +82,13 @@ object FileSources {
     * projects 3 of 5 columns — the scan's pushed projection (pruned
     * reader schema) is on the oracle path, not just spec'd.
     */
-  private def eventsAvro(s: SparkSession, dir: String): String = synchronized {
-    val key = Tables.dirKey(dir)
-    val out = s"${sys.props("java.io.tmpdir")}/graft-src/avro/$key"
-    if (!written.contains(out)) {
+  private def eventsAvro(s: SparkSession, dir: String): String =
+    Staged.dir("avro", dir) { out =>
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("ts"))
         .write.mode("overwrite").format("graft-avro").save(out)
-      written += out
     }
-    out
-  }
 
   def avroEvents(s: SparkSession, dir: String): DataFrame =
     rollup(s.read.format("graft-avro").load(eventsAvro(s, dir))
@@ -114,10 +103,8 @@ object FileSources {
     * the file schemas by name; each file's reader null-fills the
     * column it predates, per Avro's resolution rules.
     */
-  private def evolvedAvroDir(s: SparkSession, dir: String): String = synchronized {
-    val key = Tables.dirKey(dir)
-    val out = s"${sys.props("java.io.tmpdir")}/graft-src/avro-evolve/$key"
-    if (!written.contains(out)) {
+  private def evolvedAvroDir(s: SparkSession, dir: String): String =
+    Staged.dir("avro-evolve", dir) { out =>
       val ev = Tables.events(s, dir)
       ev.filter(pmod(col("event_id"), lit(2)) === 0)
         .select(col("event_id"), col("user_id"), col("value"))
@@ -125,10 +112,7 @@ object FileSources {
       ev.filter(pmod(col("event_id"), lit(2)) === 1)
         .select(col("event_id"), col("user_id"), col("event_type"))
         .write.mode("append").format("graft-avro").save(out)
-      written += out
     }
-    out
-  }
 
   /** Same rollup contract as [[evolvedEvents]]; the batch tag comes
     * from event_id parity (the write split), since a flat Avro dir
@@ -147,17 +131,15 @@ object FileSources {
         max(batch).as("max_batch"))
   }
 
-  /** Two parquet batches with EVOLVED schemas, written once per
-    * (JVM, dir): batch b=1 is the "legacy" shape (event_id, user_id,
+  /** Two parquet batches with EVOLVED schemas, staged once per
+    * dir: batch b=1 is the "legacy" shape (event_id, user_id,
     * value — no event_type column yet), batch b=2 the "current" one
     * (event_id, user_id, event_type — value dropped). The split is
     * deterministic (event_id parity) so the oracle can reconstruct
     * both generations from the fixture.
     */
-  private def evolvedDir(s: SparkSession, dir: String): String = synchronized {
-    val key = Tables.dirKey(dir)
-    val out = s"${sys.props("java.io.tmpdir")}/graft-src/evolve/$key"
-    if (!written.contains(out)) {
+  private def evolvedDir(s: SparkSession, dir: String): String =
+    Staged.dir("evolve", dir) { out =>
       val ev = Tables.events(s, dir)
       ev.filter(pmod(col("event_id"), lit(2)) === 0)
         .select(col("event_id"), col("user_id"), col("value"))
@@ -165,10 +147,7 @@ object FileSources {
       ev.filter(pmod(col("event_id"), lit(2)) === 1)
         .select(col("event_id"), col("user_id"), col("event_type"))
         .write.mode("overwrite").parquet(s"$out/b=2")
-      written += out
     }
-    out
-  }
 
   /** Schema-evolution read: `mergeSchema` unions the two batch
     * schemas by name (absent columns null-filled), and the partition
@@ -204,12 +183,10 @@ object FileSources {
 
   /** CSV with deterministically planted malformed rows (every
     * event_id ≡ 0 mod 1000 becomes a line whose numeric fields don't
-    * parse), written once per (JVM, dir) as raw text.
+    * parse), staged once per dir as raw text.
     */
-  private def corruptCsvDir(s: SparkSession, dir: String): String = synchronized {
-    val key = Tables.dirKey(dir)
-    val out = s"${sys.props("java.io.tmpdir")}/graft-src/corrupt/$key"
-    if (!written.contains(out)) {
+  private def corruptCsvDir(s: SparkSession, dir: String): String =
+    Staged.dir("corrupt", dir) { out =>
       Tables.events(s, dir)
         .select(
           when(pmod(col("event_id"), lit(1000)) === 0,
@@ -217,10 +194,7 @@ object FileSources {
             .otherwise(concat_ws(",",
               col("event_id"), col("user_id"), col("value"))).as("line"))
         .write.mode("overwrite").text(out)
-      written += out
     }
-    out
-  }
 
   /** Robust ingestion: PERMISSIVE CSV parsing with a corrupt-record
     * column — the malformed-row quarantine pattern a 100 TB text
@@ -253,8 +227,8 @@ object FileSources {
 
   /** JDBC source through embedded Derby (on the classpath as Spark's
     * metastore backend — no network endpoint needed): events are
-    * written once per (JVM, dir) into a Derby database under tmpdir
-    * via the JDBC sink, then read back with a PARTITIONED
+    * staged once per dir into a Derby database ([[graft.Staged]]),
+    * then read back with a PARTITIONED
     * `spark.read.jdbc` — partitionColumn/bounds/numPartitions, the
     * shape that turns a single-cursor JDBC pull into parallel range
     * scans (the only way a relational source feeds a large cluster
@@ -277,82 +251,76 @@ object FileSources {
     * the archive. This is the legitimate cluster shape for an
     * embedded store: ship an immutable snapshot, never a live lock.
     */
-  private def derbyDir(dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft-src/derby/${Tables.dirKey(dir)}"
-
   private[sources] val JdbcReadPartitions = 8
 
-  def jdbcEvents(s: SparkSession, dir: String): DataFrame = {
-    val dbDir = derbyDir(dir)
-    val dbJar = s"$dbDir.jar"
-    val dbName = new java.io.File(dbDir).getName
-    synchronized {
-      if (!written.contains(dbJar)) {
-        // Seed on the DRIVER through plain JDBC: Spark's JDBC sink
-        // writes from tasks, i.e. from several executor JVMs, and an
-        // embedded Derby database admits exactly one booting JVM —
-        // under local-cluster the concurrent boots deadlock on the db
-        // lock. Seeding is fixture scaffolding (the stand-in for the
-        // RDBMS a real deployment already has), so a driver-side
-        // batch insert is the honest shape; the DISTRIBUTED part of
-        // the operator is the partitioned range read below.
-        // toLocalIterator, not collect(): streams one partition at a
-        // time to the driver, so a larger fixture degrades to slower
-        // seeding instead of an opaque driver-heap blowup inside this
-        // synchronized block
-        val rows = Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value"), unix_micros(col("ts")).as("ts_us"))
-          .toLocalIterator()
-        val conn = java.sql.DriverManager
-          .getConnection(s"jdbc:derby:$dbDir;create=true")
-        try {
-          conn.setAutoCommit(false)
-          val st = conn.createStatement()
-          try { st.execute("DROP TABLE events_jdbc"); () }
-          catch { case _: java.sql.SQLException => () } // first run
-          // PRIMARY KEY: the partitioned read predicates on event_id
-          // ranges — without the index every range task table-scans
-          // the whole archive (8 partitions × full scan through zip
-          // decompression measured 28 s at sf0.1 under local-cluster;
-          // an index range scan reads each row once)
-          st.execute("""CREATE TABLE events_jdbc (
-            event_id BIGINT PRIMARY KEY, user_id BIGINT,
-            event_type VARCHAR(64), value DOUBLE, ts_us BIGINT)""")
-          st.close()
-          val ps = conn.prepareStatement(
-            "INSERT INTO events_jdbc VALUES (?, ?, ?, ?, ?)")
-          var n = 0
-          while (rows.hasNext) {
-            val r = rows.next()
-            ps.setLong(1, r.getLong(0)); ps.setLong(2, r.getLong(1))
-            ps.setString(3, r.getString(2)); ps.setDouble(4, r.getDouble(3))
-            ps.setLong(5, r.getLong(4))
-            ps.addBatch()
-            n += 1
-            if (n % 10000 == 0) { ps.executeBatch(); () }
-          }
-          ps.executeBatch()
-          ps.close()
-          conn.commit()
-        } finally conn.close()
-        // release the embedded instance (flushes the log; a booted
-        // database's files are not guaranteed archive-consistent)
-        try {
-          java.sql.DriverManager.getConnection(s"jdbc:derby:$dbDir;shutdown=true")
-          ()
-        } catch {
-          // 08006 IS the success signal for single-database shutdown
-          case e: java.sql.SQLException if e.getSQLState == "08006" => ()
+  /** The staged Derby database's archive; the jar holds it as `db/`. */
+  private def derbyJar(s: SparkSession, dir: String): String =
+    Staged.dir("derby", dir) { out =>
+      val dbDir = s"$out/db"
+      // Seed on the DRIVER through plain JDBC: Spark's JDBC sink
+      // writes from tasks, i.e. from several executor JVMs, and an
+      // embedded Derby database admits exactly one booting JVM —
+      // under local-cluster the concurrent boots deadlock on the db
+      // lock. Seeding is fixture scaffolding (the stand-in for the
+      // RDBMS a real deployment already has), so a driver-side
+      // batch insert is the honest shape; the DISTRIBUTED part of
+      // the operator is the partitioned range read below.
+      // toLocalIterator, not collect(): streams one partition at a
+      // time to the driver, so a larger fixture degrades to slower
+      // seeding instead of an opaque driver-heap blowup
+      val rows = Tables.events(s, dir)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("value"), unix_micros(col("ts")).as("ts_us"))
+        .toLocalIterator()
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+      val conn = java.sql.DriverManager
+        .getConnection(s"jdbc:derby:$dbDir;create=true")
+      try {
+        conn.setAutoCommit(false)
+        val st = conn.createStatement()
+        // PRIMARY KEY: the partitioned read predicates on event_id
+        // ranges — without the index every range task table-scans
+        // the whole archive (8 partitions × full scan through zip
+        // decompression measured 28 s at sf0.1 under local-cluster;
+        // an index range scan reads each row once)
+        st.execute("""CREATE TABLE events_jdbc (
+          event_id BIGINT PRIMARY KEY, user_id BIGINT,
+          event_type VARCHAR(64), value DOUBLE, ts_us BIGINT)""")
+        st.close()
+        val ps = conn.prepareStatement(
+          "INSERT INTO events_jdbc VALUES (?, ?, ?, ?, ?)")
+        var n = 0
+        while (rows.hasNext) {
+          val r = rows.next()
+          ps.setLong(1, r.getLong(0)); ps.setLong(2, r.getLong(1))
+          ps.setString(3, r.getString(2)); ps.setDouble(4, r.getDouble(3))
+          ps.setLong(5, r.getLong(4))
+          ps.addBatch()
+          n += 1
+          if (n % 10000 == 0) { ps.executeBatch(); () }
         }
-        jarDirectory(dbDir, dbJar, dbName)
-        written += dbJar
+        ps.executeBatch()
+        ps.close()
+        conn.commit()
+      } finally conn.close()
+      // release the embedded instance (flushes the log; a booted
+      // database's files are not guaranteed archive-consistent)
+      try {
+        java.sql.DriverManager.getConnection(s"jdbc:derby:$dbDir;shutdown=true")
+        ()
+      } catch {
+        // 08006 IS the success signal for single-database shutdown
+        case e: java.sql.SQLException if e.getSQLState == "08006" => ()
       }
-    }
+      jarDirectory(dbDir, s"$dbDir.jar", "db")
+    } + "/db.jar"
+
+  def jdbcEvents(s: SparkSession, dir: String): DataFrame = {
+    val dbJar = derbyJar(s, dir)
     val maxId = Tables.events(s, dir) // range bound: a scalar, not data
       .agg(max(col("event_id"))).head.getLong(0)
     rollup(s.read.format("jdbc")
-      .option("url", s"jdbc:derby:jar:($dbJar)$dbName")
+      .option("url", s"jdbc:derby:jar:($dbJar)db")
       .option("dbtable", "events_jdbc")
       .option("partitionColumn", "event_id")
       .option("lowerBound", "0")
@@ -362,16 +330,16 @@ object FileSources {
   }
 
   /** Archive a seeded Derby database directory as `<top>/...` entries
-    * in a jar, atomically (write to .tmp, move over). Lock files and
-    * the scratch dir are excluded — they are instance state, not
+    * in a jar (the stager marks the copy only once this returns, so no
+    * reader sees a half-written archive). Lock files and the scratch
+    * dir are excluded — they are instance state, not
     * database content, and a read-only boot must not see them.
     */
   private def jarDirectory(srcDir: String, jarPath: String,
       top: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(jarPath + ".tmp")
+    import java.nio.file.{Files, Paths}
     val base = Paths.get(srcDir)
-    val out = new java.util.zip.ZipOutputStream(Files.newOutputStream(tmp))
+    val out = new java.util.zip.ZipOutputStream(Files.newOutputStream(Paths.get(jarPath)))
     try {
       // the walk stream owns directory handles — close it, not just
       // drain its iterator
@@ -403,7 +371,6 @@ object FileSources {
       }
       } finally walk.close()
     } finally out.close()
-    Files.move(tmp, Paths.get(jarPath), StandardCopyOption.REPLACE_EXISTING)
   }
 
   private val rollupOracle =

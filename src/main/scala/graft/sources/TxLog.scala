@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.{Q, Tables}
+import graft.{Q, Staged, Tables}
 
 /** A minimal transactional table layer over parquet — ACID appends /
   * overwrites / copy-on-write deletes, snapshot isolation, time
@@ -1182,8 +1182,6 @@ object TxLog {
 
   /* ----------------------- registry fixture ------------------------ */
 
-  private val built = mutable.Set[String]()
-
   /** Deterministic multi-version table from `events` (event_id
     * residues mod 5 arrive over three commits; a mod-7 slice is then
     * deleted copy-on-write; compaction rewrites the small files; a
@@ -1191,11 +1189,8 @@ object TxLog {
     * is a closed-form predicate DuckDB can evaluate from the raw
     * parquet. The `ts` column travels as epoch micros (BIGINT).
     */
-  private def fixture(s: SparkSession, dir: String): String = synchronized {
-    val out = s"${sys.props("java.io.tmpdir")}/graft-src/txlog/${Tables.dirKey(dir)}"
-    if (!built.contains(out)) {
-      val fs = fsOf(s, out)
-      fs.delete(new Path(out), true) // stale half-built fixture from a crashed run
+  private def fixture(s: SparkSession, dir: String): String =
+    Staged.dir("txlog", dir) { out =>
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), unix_micros(col("ts")).as("ts_us"))
@@ -1210,10 +1205,7 @@ object TxLog {
       compact(s, out, 1L << 30)                                          // v4: everything binpacks
       append(s, out, slice(4).repartitionByRange(2, col("event_id")))    // v5
       vacuum(s, out, keepVersions = 6)                                   // v6: keeps v1+; orphans only
-      built += out
     }
-    out
-  }
 
   private def rollup(df: DataFrame): DataFrame =
     df.groupBy(col("event_type"))
@@ -1255,11 +1247,8 @@ object TxLog {
     * at mod-13 get value doubled (updates), residue-1 rows at mod-13
     * arrive new (inserts) — closed-form for the DuckDB oracle.
     */
-  private def mergeFixture(s: SparkSession, dir: String): String = synchronized {
-    val out = s"${sys.props("java.io.tmpdir")}/graft-src/txlog-merge/${Tables.dirKey(dir)}"
-    if (!built.contains(out)) {
-      val fs = fsOf(s, out)
-      fs.delete(new Path(out), true)
+  private def mergeFixture(s: SparkSession, dir: String): String =
+    Staged.dir("txlog-merge", dir) { out =>
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), unix_micros(col("ts")).as("ts_us"))
@@ -1273,10 +1262,7 @@ object TxLog {
         .filter(pmod(col("event_id"), lit(3)) === 1 &&
           pmod(col("event_id"), lit(13)) === 0)
       merge(s, out, updates.unionByName(inserts), Seq("event_id"))
-      built += out
     }
-    out
-  }
 
   def mergeRead(s: SparkSession, dir: String): DataFrame =
     rollup(read(s, mergeFixture(s, dir)))
@@ -1286,21 +1272,15 @@ object TxLog {
     * proves the layout rewrite lost/duplicated/altered nothing, which
     * is the correctness obligation of a physical-only operation.
     */
-  private def clusterFixture(s: SparkSession, dir: String): String = synchronized {
-    val out = s"${sys.props("java.io.tmpdir")}/graft-src/txlog-cluster/${Tables.dirKey(dir)}"
-    if (!built.contains(out)) {
-      val fs = fsOf(s, out)
-      fs.delete(new Path(out), true)
+  private def clusterFixture(s: SparkSession, dir: String): String =
+    Staged.dir("txlog-cluster", dir) { out =>
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), unix_micros(col("ts")).as("ts_us"))
       create(s, out, ev.filter(pmod(col("event_id"), lit(2)) === 0)
         .repartitionByRange(4, col("event_id")))
       cluster(s, out, "user_id", "value", 8)
-      built += out
     }
-    out
-  }
 
   def clusterRead(s: SparkSession, dir: String): DataFrame =
     rollup(read(s, clusterFixture(s, dir)))
@@ -1311,11 +1291,8 @@ object TxLog {
     * groups on the null-filled column, so a wrong fill — or a rewrite
     * where none should happen — flips the oracle.
     */
-  private def evolveFixture(s: SparkSession, dir: String): String = synchronized {
-    val out = s"${sys.props("java.io.tmpdir")}/graft-src/txlog-evolve/${Tables.dirKey(dir)}"
-    if (!built.contains(out)) {
-      val fs = fsOf(s, out)
-      fs.delete(new Path(out), true)
+  private def evolveFixture(s: SparkSession, dir: String): String =
+    Staged.dir("txlog-evolve", dir) { out =>
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"),
           col("value"), unix_micros(col("ts")).as("ts_us"))
@@ -1327,10 +1304,7 @@ object TxLog {
         .filter(pmod(col("event_id"), lit(3)) === 1)
         .select(col("event_id"), col("user_id"), col("value"),
           unix_micros(col("ts")).as("ts_us"), col("event_type")))    // v2
-      built += out
     }
-    out
-  }
 
   def evolveRead(s: SparkSession, dir: String): DataFrame =
     rollup(read(s, evolveFixture(s, dir))
@@ -1409,11 +1383,8 @@ object TxLog {
     * REINSERT — plus the appended source files. Every version's
     * content is closed-form over `events` for the oracle.
     */
-  private def morFixture(s: SparkSession, dir: String): String = synchronized {
-    val out = s"${sys.props("java.io.tmpdir")}/graft-src/txlog-mor/${Tables.dirKey(dir)}"
-    if (!built.contains(out)) {
-      val fs = fsOf(s, out)
-      fs.delete(new Path(out), true)
+  private def morFixture(s: SparkSession, dir: String): String =
+    Staged.dir("txlog-mor", dir) { out =>
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), unix_micros(col("ts")).as("ts_us"))
@@ -1421,10 +1392,7 @@ object TxLog {
       deleteWhereMor(s, out, pmod(col("event_id"), lit(7)) === 0)      // v1: DV only
       mergeMor(s, out, ev.filter(pmod(col("event_id"), lit(13)) === 0)
         .withColumn("value", col("value") * 2), Seq("event_id"))       // v2: DV + append
-      built += out
     }
-    out
-  }
 
   /** Head read of the MOR fixture: deletions and upserts both applied
     * purely at scan time (no data file was ever rewritten — the spec

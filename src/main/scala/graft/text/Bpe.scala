@@ -143,35 +143,20 @@ object Bpe {
     */
   /** Trained merge table per (session, dataset) — the verifiedPairs
     * discipline from graft.dedup: encoding must not re-run the
-    * training loop when both execute in one session, and entries of
-    * stopped sessions are evicted so a session-cycling JVM never pins
-    * dead plans. `bpe_merges` itself never reads this cache — it is
-    * the thing being measured.
+    * training loop when both execute in one session. Held in a value
+    * [[graft.KeyedMemo]] (training runs outside its lock; a racing
+    * duplicate is deterministic, so the loser's copy is simply
+    * dropped). `bpe_merges` itself never reads this memo — it is the
+    * thing being measured.
     */
-  private val mergeCache =
-    scala.collection.mutable.Map[(SparkSession, String), Array[(String, String)]]()
+  private val trainedMemo = graft.KeyedMemo.values[Array[(String, String)]]()
 
-  /** Test hook: drop the memo so a spec can race the cold-miss path. */
-  private[graft] def clearMergeCache(): Unit =
-    synchronized { mergeCache.clear() }
-  private def trainedMerges(s: SparkSession, dir: String): Array[(String, String)] = {
-    val key = (s, dir)
-    // lock only around map access, never around the multi-job training
-    // run — a concurrent caller for another (session, dir) must train
-    // independently, not queue behind this one's Spark jobs. The race
-    // window means two callers may train the same key once each; the
-    // result is deterministic, so last-publish-wins is harmless.
-    val hit = synchronized {
-      mergeCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      mergeCache.get(key)
-    }
-    hit.getOrElse {
+  private def trainedMerges(s: SparkSession, dir: String): Array[(String, String)] =
+    trainedMemo("bpe_merges", s, dir) {
       import s.implicits._
-      val trained = bpeMerges(s, dir).select(col("left"), col("right"))
+      bpeMerges(s, dir).select(col("left"), col("right"))
         .as[(String, String)].collect()
-      synchronized { mergeCache.getOrElseUpdate(key, trained) }
     }
-  }
 
   /** The distinct vocabulary of `grouped` (any frame with a word
     * column `w`) segmented by the trained merge model:

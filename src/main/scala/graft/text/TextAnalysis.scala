@@ -106,9 +106,7 @@ object TextAnalysis {
     * the df table and the final join BOTH read it, and without the
     * memo the tokenize+explode+agg would run twice per call.
     */
-  private val tfMemo = new graft.KeyedMemo
-  /** Test hook: drop the tf memo (cold-path races). */
-  private[graft] def clearTfCache(): Unit = tfMemo.clear()
+  private val tfMemo = graft.KeyedMemo.frames()
 
   private def termFreqs(s: SparkSession, dir: String): DataFrame =
     tfMemo("tfidf_tf", s, dir) {
@@ -449,19 +447,10 @@ object TextAnalysis {
     * independent of corpus size — is the graded property.
     */
   private[graft] def postingsTable(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      val name = s"graft_postings_${Tables.dirKey(dir)}"
-      if (!s.catalog.tableExists(name)) {
-        Tables.documents(s, dir)
-          .select(col("doc_id"),
-            posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-          .write.mode("overwrite")
-          .bucketBy(32, "tok").sortBy("tok", "doc_id", "pos")
-          .option("path",
-            s"${sys.props("java.io.tmpdir")}/graft-src/postings/$name")
-          .saveAsTable(name)
-      }
-      s.table(name)
+    graft.Staged.table(s, "postings", dir, "postings", 32, "tok", "doc_id", "pos") {
+      Tables.documents(s, dir)
+        .select(col("doc_id"),
+          posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
     }
 
   /** [[phraseMatch]] against the persisted postings index — same

@@ -25,8 +25,7 @@ class ConcurrencySpec extends AnyFunSuite {
     // so all 9 futures genuinely race the cold-miss path; the serial
     // reference results are computed afterwards (warm — the cached
     // result is deterministic either way).
-    graft.dedup.DedupOps.clearPairCache()
-    graft.text.Bpe.clearMergeCache()
+    KeyedMemo.clearAll()
     runConcurrent(Seq("dedup_edit_distance", "bpe_encode", "dup_count"),
       concurrentFirst = true)
   }
@@ -35,7 +34,7 @@ class ConcurrencySpec extends AnyFunSuite {
     // sparse_cosine_pairs reads the memoized df-capped postings frame
     // three times (norms + both join sides); three concurrent copies
     // race the cold-miss path of the sparse_weights key
-    graft.sim.RetrievalOps.clearRetrievalCache()
+    KeyedMemo.clearAll()
     runConcurrent(Seq("sparse_cosine_pairs", "bm25_score", "dup_count"),
       concurrentFirst = true)
   }
@@ -45,8 +44,7 @@ class ConcurrencySpec extends AnyFunSuite {
     // memoized (doc, shingle) bag, simhash_pairs the fingerprint memo —
     // cleared first (pairs too, since ngramJaccard feeds verifiedPairs)
     // so all 9 futures race the substrate cold-miss path
-    graft.dedup.DedupOps.clearSubstrateCache()
-    graft.dedup.DedupOps.clearPairCache()
+    KeyedMemo.clearAll()
     runConcurrent(
       Seq("dedup_ngram_jaccard", "dedup_similarity_histogram", "simhash_pairs"),
       concurrentFirst = true)
@@ -61,7 +59,7 @@ class ConcurrencySpec extends AnyFunSuite {
     // adds the NESTED memo shape (its compute closure calls the
     // settled_stars memo, which calls verifiedPairs — three keyed
     // entries resolved under the same contention).
-    graft.dedup.DedupOps.clearPairCache()
+    KeyedMemo.clearAll()
     runConcurrent(Seq("dedup_clusters", "dedup_keep_best",
         "dedup_clusters_star", "dedup_clusters_incr"),
       concurrentFirst = true)
@@ -74,8 +72,7 @@ class ConcurrencySpec extends AnyFunSuite {
     // exact shape the lock-scope discipline exists for (lock around
     // map access only; racing losers unpersist their copy). Cleared
     // first so all 9 futures hit the cold-miss path.
-    graft.graph.GraphOps.clearResultCache()
-    graft.ops.Joins.clearErCache()
+    KeyedMemo.clearAll()
     runConcurrent(Seq("graph_bfs", "graph_communities", "entity_resolution"),
       concurrentFirst = true)
   }
@@ -85,7 +82,7 @@ class ConcurrencySpec extends AnyFunSuite {
     // cosine_topk_ivf rebuilds the index live — racing both against
     // the brute-force baseline exercises the cold-miss path of the
     // annMemo while concurrent full builds run on the same session
-    graft.sim.SimOps.clearAnnCache()
+    KeyedMemo.clearAll()
     runConcurrent(Seq("cosine_topk_ivf_incr", "cosine_topk_ivf", "cosine_topk"),
       concurrentFirst = true)
   }
@@ -94,7 +91,7 @@ class ConcurrencySpec extends AnyFunSuite {
     // dedup_minhash_incr reads TWO settled memos (band buckets +
     // verification sets); three concurrent copies race both keys cold
     // while full builds (dedup_minhash) run on the same session
-    graft.dedup.DedupOps.clearPairCache()
+    KeyedMemo.clearAll()
     runConcurrent(
       Seq("dedup_minhash_incr", "stream_neardup", "dedup_minhash"),
       concurrentFirst = true)

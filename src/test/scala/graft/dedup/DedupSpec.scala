@@ -63,7 +63,7 @@ class DedupSpec extends AnyFunSuite {
     // past the admission bound hashedSets serves the corpus sketch
     // unpersisted, so every reference re-runs it: it must stay a
     // shuffle-free per-document pass and verify exactly like the memo
-    DedupOps.clearSubstrateCache()
+    graft.KeyedMemo.clearAll()
     val refused = DedupOps.corpusSketch(spark, sfSmall)
     val plan = refused.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange") && !plan.contains("collect_set"),

@@ -24,7 +24,6 @@ class SimSpec extends AnyFunSuite {
 
   test("LSH top-k returns a subset of true scores with correct internal order") {
     val exact = topk(sfSmall).map(t => (t._1, t._2) -> t._4).toMap
-    val brute = SimOps.cosineTopk(spark, sfSmall)
     val lsh = SimOps.cosineTopkLsh(spark, sfSmall).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
     assert(lsh.nonEmpty)

@@ -77,8 +77,9 @@ class BucketedSpec extends AnyFunSuite {
   }
 
   test("ANALYZE TABLE statistics reach the optimizer (CBO inputs)") {
-    val name = Bucketed.bucketedTable(spark, sfTiny, "orders",
+    Bucketed.bucketedTable(spark, sfTiny, "orders",
       "o_orderkey", Seq("o_orderkey", "o_orderpriority"))
+    val name = s"graft_b_orders_${graft.Tables.dirKey(sfTiny)}"
     spark.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS")
     // rowCount reaches plan Statistics only under CBO
     val prev = spark.conf.get("spark.sql.cbo.enabled")
