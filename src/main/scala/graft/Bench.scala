@@ -107,11 +107,7 @@ object Bench {
       // Start every fixture cold; the warm-up pass below rebuilds its
       // own substrates. Single-dir runs (the driver contract) skip
       // this — nothing foreign is pinned.
-      if (sfDirs.size > 1) {
-        KeyedMemo.clearAll() // every memoized substrate/model frame
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      }
+      if (sfDirs.size > 1) Evidence.dropCachedState(spark)
       def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] =
         try {
           val t0 = System.nanoTime()

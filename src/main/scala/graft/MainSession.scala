@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared SparkSession construction for the evidence mains (Verify,
-  * Bench, CandidateEconomy, IvmTiming): one place for the fixture
+/** Shared SparkSession construction for the mains (Verify, Bench,
+  * Evidence) and the perfbench harness: one place for the fixture
   * confs and for the SPARK_GRAFT_MASTER override that runs any main
   * under multi-process `local-cluster[n,cores,mem]` execution — the
   * evidence mode that exercises what single-JVM local[n] cannot:

@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Optimization-round evidence tool: dump `.explain("formatted")` for
+import org.apache.spark.sql.SparkSession
+
+/** Evidence experiment `plan_dump`: dump `.explain("formatted")` for
   * named registry queries to files. Usage:
   *
-  *   sbt "runMain graft.PlanDump <outDir> <suffix> <name1,name2,...>"
+  *   sbt "runMain graft.Evidence plan_dump <outDir> <suffix> <name1,name2,...>"
   *
   * writes `<outDir>/<name>_<suffix>.txt` per query, built against
   * SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01). The driver
@@ -13,11 +15,10 @@ import java.nio.file.{Files, Paths}
   * claims in OPTIMIZATION_r*.md against reality.
   */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    require(args.length == 3, "usage: PlanDump <outDir> <suffix> <names-csv>")
-    val Array(outDir, suffix, namesCsv) = args
+  def run(spark: SparkSession, args: Seq[String]): Unit = {
+    require(args.length == 3, "usage: plan_dump <outDir> <suffix> <names-csv>")
+    val Seq(outDir, suffix, namesCsv) = args
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = MainSession.build(defaultCpus = "32")
     Files.createDirectories(Paths.get(outDir))
     val byName = SparkEntry.registry.map(q => q.name -> q.fn).toMap
     namesCsv.split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
@@ -39,6 +40,5 @@ object PlanDump {
         txt + "\n\n== FINAL ADAPTIVE PLAN (after execution) ==\n\n" + finalPlan)
       println(s"WROTE $outDir/${name}_$suffix.txt (${txt.length} chars)")
     }
-    spark.stop()
   }
 }

@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Evidence tool (CandidateEconomy's sibling): the skew story
+import graft.Evidence.{emit, timed}
+
+/** Evidence experiment `skew_join`: the skew story
   * measured on a fixture with REAL key skew — tools/skew10.py rewrites
   * l_partkey Zipf(1), putting ~7% of all lineitem rows on one part.
   * Three legs of the same lineitem⋈part brand rollup:
@@ -26,14 +28,7 @@ import org.apache.spark.sql.functions._
   * fixture dir.
   */
 object SkewBench {
-  def main(args: Array[String]): Unit = {
-    val dirs: Seq[String] =
-      if (args.nonEmpty) args.toSeq
-      else Seq(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val spark = MainSession.build(defaultCpus = "32")
-    val f3 = (d: Double) =>
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-
+  def run(spark: SparkSession, dirs: Seq[String]): Unit = {
     def plainJoin(dir: String): DataFrame =
       Tables.lineitem(spark, dir)
         .join(Tables.part(spark, dir), col("l_partkey") === col("p_partkey"))
@@ -69,11 +64,7 @@ object SkewBench {
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
     def time(df: => DataFrame): Double = {
-      def pass(): Double = {
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      def pass(): Double = timed(df.write.format("noop").mode("overwrite").save())._2
       pass() // warm-up
       math.min(pass(), pass())
     }
@@ -97,10 +88,8 @@ object SkewBench {
       val tSalted32 = withConfs(aqeOff: _*)(
         time(graft.ops.Joins.joinSalted(spark, dir, saltR = 32)))
       val tAqe = withConfs(aqeSkew: _*)(time(plainJoin(dir)))
-      println(s"""{"metric":"skew_join","sf":"$dir",""" +
-        s""""plain_sec":${f3(tPlain)},"salted_sec":${f3(tSalted)},""" +
-        s""""salted32_sec":${f3(tSalted32)},"aqe_sec":${f3(tAqe)}}""")
+      emit("metric" -> "skew_join", "sf" -> dir, "plain_sec" -> tPlain,
+        "salted_sec" -> tSalted, "salted32_sec" -> tSalted32, "aqe_sec" -> tAqe)
     }
-    spark.stop()
   }
 }

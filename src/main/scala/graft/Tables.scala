@@ -123,24 +123,6 @@ object Tables {
     */
   def lineitemSpreadByPart(s: SparkSession, d: String): DataFrame =
     spread(s, d, "lineitem", "l_partkey")
-  /** `events.ts` has shipped in two physical encodings across fixture
-    * generations, so the loader adapts to what the file actually
-    * holds (one schema probe, no data read):
-    *  - TIMESTAMP(NANOS): Spark's vectorized reader rejects it
-    *    ([PARQUET_TYPE_ILLEGAL]) unless the session sets
-    *    `spark.sql.legacy.parquet.nanosAsLong=true` at build time
-    *    (GraftSession / Verify / Bench / TestSpark all do), which
-    *    reads the column as a raw nanos long — truncated here to
-    *    microseconds, matching DuckDB's `CAST(ts AS TIMESTAMP)`.
-    *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): reads as
-    *    TIMESTAMP_NTZ — cast to TIMESTAMP, which under the session's
-    *    pinned UTC timezone keeps the same wall-clock instant DuckDB
-    *    sees as a naive timestamp, so `unix_micros(ts)` ==
-    *    `epoch_us(ts)` in every downstream comparison.
-    * Either way downstream code sees one canonical shape: `ts` as
-    * TIMESTAMP at microsecond precision. Session conf is never
-    * mutated here — that would be a surprise for library users.
-    */
   /** [[events]] with the map side fanned out on user_id (the window
     * family's partition key, so the exchange doubles as the window
     * exchange). OPT-IN per query: blanket-spreading events regressed
@@ -152,6 +134,24 @@ object Tables {
   def eventsSpread(s: SparkSession, d: String): DataFrame =
     spreadDf(s, events(s, d), s"$d/events.parquet", "user_id")
 
+  /** `events.ts` has shipped in two physical encodings across fixture
+    * generations, so the loader adapts to what the file actually
+    * holds (one schema probe, no data read):
+    *  - TIMESTAMP(NANOS): Spark's vectorized reader rejects it
+    *    ([PARQUET_TYPE_ILLEGAL]) unless the session sets
+    *    `spark.sql.legacy.parquet.nanosAsLong=true` at build time
+    *    (MainSession, GraftSession and TestSpark all do), which
+    *    reads the column as a raw nanos long — truncated here to
+    *    microseconds, matching DuckDB's `CAST(ts AS TIMESTAMP)`.
+    *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): reads as
+    *    TIMESTAMP_NTZ — cast to TIMESTAMP, which under the session's
+    *    pinned UTC timezone keeps the same wall-clock instant DuckDB
+    *    sees as a naive timestamp, so `unix_micros(ts)` ==
+    *    `epoch_us(ts)` in every downstream comparison.
+    * Either way downstream code sees one canonical shape: `ts` as
+    * TIMESTAMP at microsecond precision. Session conf is never
+    * mutated here — that would be a surprise for library users.
+    */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}

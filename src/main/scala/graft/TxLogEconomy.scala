@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Evidence.{emit, timed}
 import graft.sources.TxLog
 
-/** Evidence tool (CandidateEconomy/SkewBench's sibling): the
-  * transactional table's three scale claims, MEASURED on a real
-  * fixture instead of asserted —
+/** Evidence experiment `txlog_economy`: the transactional table's
+  * three scale claims, MEASURED on a real fixture instead of
+  * asserted —
   *
   *  1. '''Data skipping''': a selective predicate on the cluster key
   *     opens the files its bounds admit, not the table. Reported:
@@ -26,26 +28,40 @@ import graft.sources.TxLog
   * scan-heavy production key earns.
   */
 object TxLogEconomy {
-  def main(args: Array[String]): Unit = {
-    val dirs: Seq[String] =
-      if (args.nonEmpty) args.toSeq
-      else Seq(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val spark = MainSession.build(defaultCpus = "32")
-    val f3 = (d: Double) =>
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    def timed[T](body: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = body
-      (r, (System.nanoTime() - t0) / 1e9)
+  /** One measured merge: the snapshots either side of it and its wall
+    * time.
+    */
+  private final case class MergeCost(before: TxLog.Snapshot, after: TxLog.Snapshot, sec: Double) {
+    private def minus(a: TxLog.Snapshot, b: TxLog.Snapshot): Seq[TxLog.AddFile] = {
+      val kept = b.files.map(_.path).toSet
+      a.files.filterNot(f => kept(f.path))
     }
+    def removed: Seq[TxLog.AddFile] = minus(before, after)
+    def added: Seq[TxLog.AddFile] = minus(after, before)
+    def tableBytes: Long = before.files.map(_.bytes).sum
+  }
 
+  def run(spark: SparkSession, dirs: Seq[String]): Unit =
     for (dir <- dirs) {
       val table = java.nio.file.Files
         .createTempDirectory("graft-txlog-econ").toString + "/t"
+      def measure(merge: => Unit): MergeCost = {
+        val before = TxLog.snapshotState(spark, table)
+        val (_, sec) = timed(merge)
+        MergeCost(before, TxLog.snapshotState(spark, table), sec)
+      }
+      // a copy-on-write merge's line: what it rewrote against the table
+      def cowLine(claim: String, m: MergeCost, batchKeys: Option[Long]): Unit =
+        emit(Seq("metric" -> "txlog_economy", "claim" -> claim, "sf" -> dir) ++
+          batchKeys.map("batch_keys" -> _) ++ Seq(
+          "files_rewritten" -> m.removed.size, "files_total" -> m.before.files.size,
+          "bytes_rewritten" -> m.removed.map(_.bytes).sum, "bytes_table" -> m.tableBytes,
+          "sec_merge" -> m.sec): _*)
+
       val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), unix_micros(col("ts")).as("ts_us"))
       TxLog.create(spark, table, ev.repartitionByRange(64, col("event_id")))
-      val snap0 = TxLog.snapshotState(spark, table)
       val maxId = ev.agg(max(col("event_id"))).head.getLong(0)
       val band = maxId / 100 // ~1% of the key range
 
@@ -55,24 +71,16 @@ object TxLogEconomy {
       val (nPruned, tPruned) = timed(TxLog.readWhere(spark, table, cond).count())
       val (nFull, tFull) = timed(TxLog.read(spark, table).filter(cond).count())
       require(nPruned == nFull, s"pruned read lost rows: $nPruned != $nFull")
-      println(s"""{"metric":"txlog_economy","claim":"skipping","sf":"$dir",""" +
-        s""""files_selected":${sel.size},"files_total":$total,""" +
-        s""""rows":$nPruned,"sec_pruned":${f3(tPruned)},"sec_full":${f3(tFull)}}""")
+      emit("metric" -> "txlog_economy", "claim" -> "skipping", "sf" -> dir,
+        "files_selected" -> sel.size, "files_total" -> total,
+        "rows" -> nPruned, "sec_pruned" -> tPruned, "sec_full" -> tFull)
 
       // 2. merge: a 1%-band CDC batch (updates in-band + fresh inserts)
       val batch = ev.filter(col("event_id") < band)
         .withColumn("value", col("value") * 2)
         .unionByName(ev.filter(col("event_id") >= maxId - band)
           .withColumn("event_id", col("event_id") + maxId + 1))
-      val (_, tMerge) = timed(TxLog.merge(spark, table, batch, Seq("event_id")))
-      val snap1 = TxLog.snapshotState(spark, table)
-      val rewritten = snap0.files.map(_.path).toSet -- snap1.files.map(_.path).toSet
-      val rewrittenBytes = snap0.files.filter(f => rewritten(f.path)).map(_.bytes).sum
-      val tableBytes = snap0.files.map(_.bytes).sum
-      println(s"""{"metric":"txlog_economy","claim":"merge","sf":"$dir",""" +
-        s""""files_rewritten":${rewritten.size},"files_total":${snap0.files.size},""" +
-        s""""bytes_rewritten":$rewrittenBytes,"bytes_table":$tableBytes,""" +
-        s""""sec_merge":${f3(tMerge)}}""")
+      cowLine("merge", measure(TxLog.merge(spark, table, batch, Seq("event_id"))), None)
 
       // Skewed key source for 2c/2b: the fixture's lineitem l_partkey
       // — Zipf(1) on a tools/skew10.py fixture — rescaled onto the
@@ -84,6 +92,10 @@ object TxLogEconomy {
           lit(100L)) === 0L)
         .select(floor(col("l_partkey") * keyScale).cast("long").as("event_id"))
         .distinct()
+      def skewBatch(keys: DataFrame, factor: Int): DataFrame =
+        ev.join(keys, Seq("event_id"), "left_semi")
+          .withColumn("value", col("value") * factor)
+          .dropDuplicates("event_id")
 
       // 2c. the same skewed source confined to its HEAD band (the hot
       // keys only, no tail) — separates key LOCALITY from key SKEW:
@@ -93,22 +105,10 @@ object TxLogEconomy {
       // the mitigation at that dispersion is merge-on-read deletion
       // vectors, out of this table's COW scope, or clustering by
       // update affinity)
-      val snapC = TxLog.snapshotState(spark, table)
-      val headBatch = ev.join(
-          skewKeys.filter(col("event_id") <= lit(maxId / 100)),
-          Seq("event_id"), "left_semi")
-        .withColumn("value", col("value") * 5)
-        .dropDuplicates("event_id")
+      val headBatch = skewBatch(skewKeys.filter(col("event_id") <= lit(maxId / 100)), 5)
       val nHead = headBatch.count()
-      val (_, tMergeH) = timed(TxLog.merge(spark, table, headBatch, Seq("event_id")))
-      val snapC1 = TxLog.snapshotState(spark, table)
-      val rewrittenH = snapC.files.map(_.path).toSet -- snapC1.files.map(_.path).toSet
-      val rewrittenHBytes = snapC.files.filter(f => rewrittenH(f.path)).map(_.bytes).sum
-      println(s"""{"metric":"txlog_economy","claim":"merge_skew_head","sf":"$dir",""" +
-        s""""batch_keys":$nHead,""" +
-        s""""files_rewritten":${rewrittenH.size},"files_total":${snapC.files.size},""" +
-        s""""bytes_rewritten":$rewrittenHBytes,"bytes_table":${snapC.files.map(_.bytes).sum},""" +
-        s""""sec_merge":${f3(tMergeH)}}""")
+      cowLine("merge_skew_head",
+        measure(TxLog.merge(spark, table, headBatch, Seq("event_id"))), Some(nHead))
 
       // 2b. merge under SKEWED keys (r11): the update batch's keys
       // come from the fixture's lineitem l_partkey — on a
@@ -121,21 +121,10 @@ object TxLogEconomy {
       // three-stage design must not degrade to a full-table rewrite
       // on. On a uniform fixture the same code measures the uniform
       // baseline; compare the two lines in BASELINE.md.
-      val snapB = TxLog.snapshotState(spark, table)
-      val skewBatch = ev.join(skewKeys, Seq("event_id"), "left_semi")
-        .withColumn("value", col("value") * 3)
-        .dropDuplicates("event_id")
-      val nBatch = skewBatch.count()
-      val (_, tMergeZ) = timed(TxLog.merge(spark, table, skewBatch, Seq("event_id")))
-      val snapB1 = TxLog.snapshotState(spark, table)
-      val rewrittenZ = snapB.files.map(_.path).toSet -- snapB1.files.map(_.path).toSet
-      val rewrittenZBytes = snapB.files.filter(f => rewrittenZ(f.path)).map(_.bytes).sum
-      val tableZBytes = snapB.files.map(_.bytes).sum
-      println(s"""{"metric":"txlog_economy","claim":"merge_skew","sf":"$dir",""" +
-        s""""batch_keys":$nBatch,""" +
-        s""""files_rewritten":${rewrittenZ.size},"files_total":${snapB.files.size},""" +
-        s""""bytes_rewritten":$rewrittenZBytes,"bytes_table":$tableZBytes,""" +
-        s""""sec_merge":${f3(tMergeZ)}}""")
+      val zBatch = skewBatch(skewKeys, 3)
+      val nBatch = zBatch.count()
+      cowLine("merge_skew",
+        measure(TxLog.merge(spark, table, zBatch, Seq("event_id"))), Some(nBatch))
 
       // 2d. the same dispersed batch via MERGE-ON-READ (r11): matched
       // rows are DV-deleted in place and the batch appends as new
@@ -143,22 +132,15 @@ object TxLogEconomy {
       // dispersion, where 2b's copy-on-write rewrote ~the whole
       // table. Also timed: the head read paying the DV anti-join
       // (the read-amplification side of the trade).
-      val snapD = TxLog.snapshotState(spark, table)
-      val morBatch = ev.join(skewKeys, Seq("event_id"), "left_semi")
-        .withColumn("value", col("value") * 4)
-        .dropDuplicates("event_id")
-      val (_, tMorMerge) = timed(TxLog.mergeMor(spark, table, morBatch, Seq("event_id")))
-      val snapD1 = TxLog.snapshotState(spark, table)
-      val addedD = snapD1.files.map(_.path).toSet -- snapD.files.map(_.path).toSet
-      val addedBytes = snapD1.files.filter(f => addedD(f.path)).map(_.bytes).sum
-      val dvBytes = snapD1.dvs.map(_.bytes).sum
-      val removedD = snapD.files.map(_.path).toSet -- snapD1.files.map(_.path).toSet
+      val morBatch = skewBatch(skewKeys, 4)
+      val mor = measure(TxLog.mergeMor(spark, table, morBatch, Seq("event_id")))
       val (_, tReadDv) = timed(TxLog.read(spark, table).count())
-      println(s"""{"metric":"txlog_economy","claim":"merge_mor_skew","sf":"$dir",""" +
-        s""""batch_keys":${morBatch.count()},"files_removed":${removedD.size},""" +
-        s""""bytes_written_data":$addedBytes,"bytes_written_dv":$dvBytes,""" +
-        s""""bytes_table":${snapD.files.map(_.bytes).sum},""" +
-        s""""sec_merge":${f3(tMorMerge)},"sec_read_with_dvs":${f3(tReadDv)}}""")
+      emit("metric" -> "txlog_economy", "claim" -> "merge_mor_skew", "sf" -> dir,
+        "batch_keys" -> morBatch.count(), "files_removed" -> mor.removed.size,
+        "bytes_written_data" -> mor.added.map(_.bytes).sum,
+        "bytes_written_dv" -> mor.after.dvs.map(_.bytes).sum,
+        "bytes_table" -> mor.tableBytes,
+        "sec_merge" -> mor.sec, "sec_read_with_dvs" -> tReadDv)
 
       // 3. metadata: 120 tiny commits, then head resolution from cold
       // caches — cost is checkpoint + suffix, not history length
@@ -171,15 +153,13 @@ object TxLogEconomy {
       val head = TxLog.currentVersion(spark, table)
       val ckpts = new java.io.File(s"$table/_txlog").listFiles()
         .count(_.getName.startsWith("checkpoint-"))
-      println(s"""{"metric":"txlog_economy","claim":"metadata","sf":"$dir",""" +
-        s""""versions":$head,"checkpoints":$ckpts,""" +
-        s""""files_at_head":${snapN.files.size},"sec_resolve_cold":${f3(tResolve)}}""")
+      emit("metric" -> "txlog_economy", "claim" -> "metadata", "sf" -> dir,
+        "versions" -> head, "checkpoints" -> ckpts,
+        "files_at_head" -> snapN.files.size, "sec_resolve_cold" -> tResolve)
 
       // leave no fixture behind
       new Path(table).getFileSystem(spark.sessionState.newHadoopConf())
         .delete(new Path(table).getParent, true)
       ()
     }
-    spark.stop()
-  }
 }

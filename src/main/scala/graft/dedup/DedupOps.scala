@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.text.TextOps.tokensSql
 
 /** Deduplication operators for a large-scale training-data pipeline —
   * the capability the reference's MapReduce contract would be used for
@@ -28,8 +29,6 @@ object DedupOps {
   import graft.text.TextOps.tokens
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  private val tokensSql = "regexp_extract_all(lower(text), '[a-z]+')"
 
   /** Exact dedup by content hash: one representative (min doc_id) per
     * distinct text plus the duplicate count. Aggregation, not a
@@ -1631,8 +1630,8 @@ object DedupOps {
     * fingerprint dump and the pairing oracle.
     */
   private val simhashSqlCtes =
-    """toks AS (
-      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS t
+    s"""toks AS (
+      |  SELECT doc_id, $tokensSql AS t
       |  FROM documents),
       |hs AS (
       |  SELECT doc_id, list_transform(t,
@@ -2335,9 +2334,9 @@ object DedupOps {
          |  FROM reach GROUP BY u),
          |dropped AS (SELECT doc_id FROM clusters WHERE doc_id <> canonical)
          |SELECT doc_id,
-         |  len(regexp_extract_all(lower(text), '[a-z]+')) AS n_tokens
+         |  len($tokensSql) AS n_tokens
          |FROM documents
-         |WHERE len(regexp_extract_all(lower(text), '[a-z]+')) >= 20
+         |WHERE len($tokensSql) >= 20
          |  AND doc_id NOT IN (SELECT doc_id FROM dropped)""".stripMargin)(curateCorpus),
     Q("dedup_edit_distance",
       s"""WITH pairs AS (

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.text.TextOps.tokensSql
 
 /** Typed `Aggregator[IN, BUF, OUT]` surface (SURVEY.md §2.4 R16) —
   * the UDAF shape a reference user writes when the reduce is an
@@ -197,9 +198,9 @@ object TypedAggregators {
         |    / CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 6) AS wmean_price
         |FROM lineitem GROUP BY l_returnflag""".stripMargin)(aggWeightedMean),
     Q("cms_heavy_hitters",
-      """SELECT tok AS word, COUNT(*) AS cnt,
+      s"""SELECT tok AS word, COUNT(*) AS cnt,
         |  TRUE AS est_lower_ok, TRUE AS est_upper_ok
-        |FROM (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS tok
+        |FROM (SELECT unnest($tokensSql) AS tok
         |      FROM documents)
         |GROUP BY 1 ORDER BY cnt DESC, word LIMIT 20""".stripMargin)(
       cmsHeavyHitters),

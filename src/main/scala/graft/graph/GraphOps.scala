@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Q
 import graft.text.TextAnalysis
+import graft.text.TextOps.tokensSql
 
 /** Link-analysis operators over graphs derived from the fixture
   * corpus. The reference has no graph surface at all (its only
@@ -24,7 +25,6 @@ object GraphOps {
 
   val Damping = 0.85
   val Iters = 3
-  private val tokensSql = "regexp_extract_all(lower(text), '[a-z]+')"
 
   /** Weighted word-adjacency edges: wt(u→v) = c(u,v) / c(u,·).
     * Long/long division — both engines produce the identical double.

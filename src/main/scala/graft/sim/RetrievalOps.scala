@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.vecDot
+import graft.text.TextOps.tokensSql
 
 /** Hybrid retrieval and embedding-hygiene operators — the two sides
   * of a RAG/data-curation index the reference engine (a bare
@@ -280,7 +281,7 @@ object RetrievalOps {
 
   private val sparseCosineOracle =
     s"""WITH t0 AS (
-       |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS t
+       |  SELECT doc_id, $tokensSql AS t
        |  FROM documents),
        |g AS (
        |  SELECT doc_id, unnest(list_transform(range(1, greatest(len(t), 1)),
@@ -340,7 +341,6 @@ object RetrievalOps {
   }
 
   private val ragOracle = {
-    val tokensSql = "regexp_extract_all(lower(text), '[a-z]+')"
     s"""WITH t0 AS (
        |  SELECT doc_id, $tokensSql AS t FROM documents),
        |r AS (

@@ -14,9 +14,10 @@ import org.apache.spark.sql.SparkSession
   * — the at-least-once replay turning into exactly-once output.
   *
   * Lives in src/main (not the spec) so the protocol can run under ANY
-  * master: the spec harness pins `local[4,2]` in one JVM, while
-  * [[ExactlyOnceCheck]] runs the same function under
-  * `SPARK_GRAFT_MASTER=local-cluster[...]` — multi-process executors,
+  * master: the spec harness pins `local[4,2]` in one JVM, while the
+  * `exactly_once` experiment of [[graft.Evidence]] runs the same
+  * function under `SPARK_GRAFT_MASTER=local-cluster[...]` —
+  * multi-process executors,
   * real HDFSBackedStateStore recovery and sink-log reads across JVM
   * boundaries — without shipping test classes to executors (every
   * closure here is in the main jar [[graft.MainSession]] already
@@ -101,25 +102,5 @@ object ExactlyOnceHarness {
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     check(sink.toSet == twin.toSet && sink.size == twin.size,
       s"sink ${sink.sorted} != batch twin ${twin.sorted}")
-  }
-}
-
-/** Evidence main (Bench/IvmTiming's sibling): runs
-  * [[ExactlyOnceHarness]] under [[graft.MainSession]] — i.e. under
-  * whatever SPARK_GRAFT_MASTER names, which is how the protocol gets
-  * exercised with multi-process `local-cluster` executors (the one
-  * streaming family whose multi-JVM behavior was previously only
-  * assumed). Prints one JSON line on success; a protocol violation
-  * throws and the run exits nonzero.
-  */
-object ExactlyOnceCheck {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.MainSession.build(defaultCpus = "4")
-    val t0 = System.nanoTime()
-    ExactlyOnceHarness.run(spark)
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(s"""{"metric":"exactly_once_protocol","master":"${spark.sparkContext.master}",""" +
-      s""""ok":true,"sec":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(sec))}}""")
-    spark.stop()
   }
 }

@@ -395,15 +395,6 @@ object StreamOps {
       }
   }
 
-  /** [[runningUserTotals]] on the Spark 4 transformWithState API —
-    * the successor to mapGroupsWithState: named state slots with
-    * per-slot encoders and TTL, timer callbacks, and a state store
-    * that must be RocksDB-backed (set
-    * `spark.sql.streaming.stateStore.providerClass` to the RocksDB
-    * provider). Streaming-only by design (the API rejects batch
-    * frames); the legacy operator above remains the batch-capable
-    * form.
-    */
   /** Streaming sharded CMS over a token column (see
     * [[graft.stream.CmsShardProcessor]]); `shards` keys spread the
     * state updates, and summing the latest emitted sketches
@@ -419,6 +410,14 @@ object StreamOps {
         TimeMode.None(), OutputMode.Update())
   }
 
+  /** [[runningUserTotals]] on the Spark 4 transformWithState API —
+    * the successor to mapGroupsWithState: named state slots with
+    * per-slot encoders and TTL, timer callbacks, and a state store
+    * that must be RocksDB-backed (set
+    * `spark.sql.streaming.stateStore.providerClass` to the RocksDB
+    * provider). Streaming-only by design (the API rejects batch
+    * frames); the legacy operator remains the batch-capable form.
+    */
   def runningUserTotalsTws(events: DataFrame): Dataset[UserRunning] = {
     val s = events.sparkSession
     import s.implicits._

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.text.TextOps.tokensSql
 
 /** BPE merge training — the tokenizer-training loop itself, the step
   * upstream of every token-counting operator here: learn the top
@@ -240,8 +241,6 @@ object Bpe {
        |  round(CAST(SUM(cnt * n_chars) AS BIGINT)
        |    / CAST(SUM(cnt * n_syms) AS DOUBLE), 6) AS chars_per_token
        |FROM psw JOIN enc USING (w) GROUP BY 1""".stripMargin
-
-  private val tokensSql = "regexp_extract_all(lower(text), '[a-z]+')"
 
   /** DuckDB replay of the training loop, unrolled to [[Merges]] CTE
     * rounds. Word segmentations travel as delimited strings

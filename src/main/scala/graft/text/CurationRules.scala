@@ -37,9 +37,7 @@ import graft.{Q, Tables}
   */
 object CurationRules {
 
-  import TextOps.tokens
-
-  private val tokensSql = "regexp_extract_all(lower(text), '[a-z]+')"
+  import TextOps.{tokens, tokensSql}
 
   // ---- Gopher quality rules ----------------------------------------
 

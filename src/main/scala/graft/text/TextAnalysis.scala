@@ -46,9 +46,7 @@ object SplitHash {
 
 object TextAnalysis {
 
-  import TextOps.tokens
-
-  private val tokensSql = "regexp_extract_all(lower(text), '[a-z]+')"
+  import TextOps.{tokens, tokensSql}
 
   /** Bigram counts across the corpus (SURVEY.md §7.3 step 5).
     * Bigrams come from a typed flatMap — one JVM pass per document;
@@ -347,7 +345,7 @@ object TextAnalysis {
     * said −61.6938 (the kneser_ney defect class, BASELINE.md).
     */
   def readability(s: SparkSession, dir: String): DataFrame = {
-    val words = size(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
+    val words = size(tokens(col("text")))
     val sents = size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
     val vg = size(regexp_extract_all(lower(col("text")), lit("[aeiou]+"), lit(0)))
     Tables.documents(s, dir)
@@ -1377,7 +1375,7 @@ object TextAnalysis {
          |    ORDER BY key, doc_id) AS BIGINT) AS rn
          |FROM k QUALIFY rn <= $WeightedSampleK""".stripMargin)(weightedSample),
     Q("readability",
-      """SELECT doc_id, n_words, n_sents, n_syll,
+      s"""SELECT doc_id, n_words, n_sents, n_syll,
         |  ((2 * (2068350 * n_sents * n_words - 10150 * n_words * n_words
         |         - 846000 * n_syll * n_sents)
         |    + CASE WHEN (2068350 * n_sents * n_words - 10150 * n_words * n_words
@@ -1386,7 +1384,7 @@ object TextAnalysis {
         |   // (2 * n_sents * n_words)) / 10000.0 AS flesch
         |FROM (
         |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT)
+        |    CAST(len($tokensSql) AS BIGINT)
         |      AS n_words,
         |    CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT)
         |      AS n_sents,
@@ -1417,8 +1415,8 @@ object TextAnalysis {
          |  unnest(range(1, len(t) + 1)) AS u(i)
          |JOIN v ON t[i] = v.tok""".stripMargin)(tokenIds),
     Q("length_buckets",
-      """WITH d AS (
-        |  SELECT CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT)
+      s"""WITH d AS (
+        |  SELECT CAST(len($tokensSql) AS BIGINT)
         |    AS n_tokens
         |  FROM documents),
         |b AS (
@@ -1731,9 +1729,9 @@ object TextAnalysis {
          |FROM b JOIN cx ON b.w1 = x1 JOIN cy ON b.w2 = y2, n
          |WHERE b.c_xy >= 5""".stripMargin)(collocationPmi),
     Q("doc_fingerprint",
-      """SELECT doc_id,
+      s"""SELECT doc_id,
         |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(
-        |    regexp_extract_all(lower(text), '[a-z]+'),
+        |    $tokensSql,
         |    tok -> CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT) % 2147483647)),
         |    (acc, h) -> (acc * 31 + h) % 2147483647) AS fingerprint
         |FROM documents""".stripMargin)(docFingerprint),

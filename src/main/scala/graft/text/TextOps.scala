@@ -28,7 +28,10 @@ object TextOps {
   def tokens(text: Column): Column =
     regexp_extract_all(lower(text), lit("[a-z]+"), lit(0))
 
-  private val tokensSql = "regexp_extract_all(lower(text), '[a-z]+')"
+  /** [[tokens]] in the oracle SQL dialect; every oracle that tokenizes
+    * text names it, so the two engines split words one way.
+    */
+  private[graft] final val tokensSql = "regexp_extract_all(lower(text), '[a-z]+')"
 
   def wordCount(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)

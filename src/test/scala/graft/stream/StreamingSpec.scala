@@ -818,8 +818,9 @@ class StreamingSpec extends AnyFunSuite {
     // MemoryStream specs above cannot cover. The protocol itself
     // lives in src/main (ExactlyOnceHarness: every closure on the
     // executor classpath) so the SAME function also runs under
-    // multi-process local-cluster masters via the ExactlyOnceCheck
-    // main; a protocol violation throws and fails this test.
+    // multi-process local-cluster masters via the `exactly_once`
+    // evidence experiment; a protocol violation throws and fails
+    // this test.
     ExactlyOnceHarness.run(spark)
   }
 }
